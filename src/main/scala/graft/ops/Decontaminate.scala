@@ -80,7 +80,7 @@ object Decontaminate {
       .select(col("band"), col("band_key"), col("id").as("cid"))
     val bb = Dedup.lshBuckets(bs, bands)
       .select(col("band"), col("band_key"), col("id").as("bid"))
-    val cands = cb.join(bb.hint("merge"), Seq("band", "band_key"))
+    val cands = Banded.crossPairs(cb, bb)
       .select(col("cid"), col("bid")).distinct()
     cands
       .join(cs.select(col("id").as("cid"), col("hs").as("chs")), "cid")

@@ -9,9 +9,10 @@ import graft.functions._
   * Scale design (100 TB):
   *  - exact dedup is one hash-shuffle on a 128-bit digest (never on the
   *    raw text — the digest is computed map-side so only 16 bytes move);
-  *  - MinHash/LSH turns all-pairs O(n²) into a band-bucket equi-join:
-  *    candidate pairs only form inside identical (band, signature-slice)
-  *    buckets, which Spark executes as a shuffle join on the band key;
+  *  - MinHash/LSH turns all-pairs O(n²) into banded candidates:
+  *    pairs only form inside identical (band, signature-slice) buckets
+  *    ([[Banded]] — bucket-local expansion within one corpus, a
+  *    sort-merge join on the band key across two);
   *  - verification (true Jaccard / cosine) runs only on candidates.
   *
   * All hashing is md5-based so results are deterministic and portable
@@ -162,60 +163,18 @@ object Dedup {
           b => md5(concat_ws("|", transform(slice(col("sig"), b * sigLen + 1, sigLen),
             x => x.cast("string")))))
       }
-    signatures.select(col("id"), col("hs"), posexplode(keys))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
+    Banded.buckets(signatures, keys, col("id"), col("hs"))
   }
 
   /** Candidate pairs from LSH buckets (id1 < id2, distinct) —
-    * bucket-local expansion via [[inBucketPairs]], no cross product;
-    * only ids travel through the distinct.
-    *
-    * `maxBucket` (opt-in) is the degenerate-bucket guard for corpus
-    * scale: a bucket of n docs yields n(n-1)/2 candidate pairs, so ONE
-    * pathological key (boilerplate, near-empty docs sharing a
-    * signature) can dominate the whole job — at 100 TB a single
-    * million-doc bucket is 5·10¹¹ pairs. Buckets above the cap are
-    * dropped before pair expansion (standard production LSH practice);
-    * a true near-dup pair inside an over-full bucket is still found
-    * whenever it shares any smaller band bucket, so the recall loss is
-    * confined to pairs ALL of whose shared buckets are degenerate —
-    * exactly the boilerplate case the cap exists to neutralize. */
+    * bucket-local expansion via [[Banded.selfPairs]], no cross product;
+    * only ids travel through the distinct. `maxBucket` (opt-in) drops
+    * degenerate buckets before expansion — the recall loss is confined
+    * to pairs ALL of whose shared buckets are over the cap, exactly the
+    * boilerplate case the cap exists to neutralize. */
   def lshCandidatePairs(signatures: DataFrame, bands: Int,
-                        maxBucket: Int = Int.MaxValue): DataFrame = {
-    val b0 = lshBuckets(signatures, bands).select(col("band"), col("band_key"), col("id"))
-    inBucketPairs(b0, Seq("band", "band_key"), maxBucket).distinct()
-  }
-
-  /** In-bucket candidate pairs WITHOUT a self-join (round-13, guide
-    * §2.4): group ids per bucket and expand the i<j combinations
-    * bucket-locally. The former shape shuffled the identical bucketed
-    * frame TWICE (Exchange+Sort per side of a sort-merge self-join —
-    * Catalyst won't broadcast either side safely because it sizes them
-    * before the explode); this shuffles (bucket key, id) ONCE into an
-    * ObjectHashAggregate (collect_list — no sort), then two Generates
-    * emit the pairs. Work per bucket stays O(n²) — exactly the pairs
-    * that must be emitted; the slice in the inner Generate copies O(n)
-    * per OUTER row, so nothing super-linear in the output hides here.
-    * The degenerate-bucket cap becomes a free size() filter where the
-    * join shape needed a separate count aggregate + semi-join; memory
-    * per bucket is one id array, bounded by the cap at scale (an
-    * uncapped million-id bucket is 5·10¹¹ pairs — infeasible under
-    * EITHER shape, so the cap, not the operator, is the scale guard).
-    * sort_array uses the same ascending ordering as the old
-    * `id1 < id2` predicate, so the emitted pair set is identical. */
-  private def inBucketPairs(b: DataFrame, keys: Seq[String],
-                            maxBucket: Int): DataFrame = {
-    val grouped = b.groupBy(keys.map(col): _*)
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-    val capped =
-      if (maxBucket == Int.MaxValue) grouped
-      else grouped.where(size(col("ids")) <= maxBucket)
-    capped.where(size(col("ids")) >= 2)
-      .select(posexplode(col("ids")).as(Seq("i", "id1")), col("ids"))
-      .select(col("id1"),
-        explode(slice(col("ids"), col("i") + lit(2),
-          size(col("ids")) - col("i") - lit(1))).as("id2"))
-  }
+                        maxBucket: Int = Int.MaxValue): DataFrame =
+    Banded.selfPairs(lshBuckets(signatures, bands), maxBucket).distinct()
 
   /** Full MinHash-LSH near-dup pipeline: candidates verified by exact
     * Jaccard over the shingle-hash sets (>= threshold). The hash sets are
@@ -259,7 +218,7 @@ object Dedup {
       .select(col("band"), col("band_key"), col("id").as("new_id"))
     val cb = lshBuckets(corpusIndex, bands)
       .select(col("band"), col("band_key"), col("id").as("corpus_id"))
-    nb.join(cb.hint("merge"), Seq("band", "band_key"))
+    Banded.crossPairs(nb, cb)
       .select(col("new_id"), col("corpus_id")).distinct()
       .join(nsigs.select(col("id").as("new_id"), col("hs").as("hs1")), "new_id")
       .join(corpusIndex.select(col("id").as("corpus_id"), col("hs").as("hs2")),
@@ -334,50 +293,14 @@ object Dedup {
 
   /** SimHash near-dup pairs: hamming distance <= maxDist within
     * same-band blocking (4 bands of 15 bits → any pair within distance 3
-    * shares at least one exact band).
-    *
-    * The band self-join runs over DISTINCT simhash values, not documents:
-    * a degenerate corpus with an m-document identical cluster would
-    * otherwise put m copies of the same key in every band bucket and pay
-    * an m² join blow-up per band. Distinct-value pairs are expanded back
-    * to document pairs afterwards, and same-value (hamming 0) pairs are
-    * produced by a direct equi-self-join — both expansions are
-    * proportional to the OUTPUT size, which is the lower bound anyway. */
+    * shares at least one exact band) — [[Banded.hammingPairs]] over one
+    * fused codegen'd simhash per document. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxDist: Int = 3): DataFrame = {
-    // persist = optimizer barrier AND the only heavy scan: one fused
-    // codegen'd simhash per document
-    val docs = sharedPersist(
-      df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sh")))
-    // distinct VALUES (not persisted: one cheap shuffle of longs over the
-    // cached docs, consumed once by the band join and once as self-pairs)
-    val values = docs.select(col("sh")).distinct()
-    val banded = values.select(col("sh"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("sh"), b * 15).bitwiseAND(0x7fffL)): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
-    val l = banded.select(col("band"), col("band_key"), col("sh").as("sh1"))
-    val r = banded.select(col("band"), col("band_key"), col("sh").as("sh2"))
-    // distinct simhash pairs within hamming range (deduped across bands)
-    val shPairs = l.join(r.hint("merge"), Seq("band", "band_key")).where(col("sh1") < col("sh2"))
-      .select(col("sh1"), col("sh2"),
-        bit_count(col("sh1").bitwiseXOR(col("sh2"))).cast("long").as("hamming"))
-      .where(col("hamming") <= maxDist) // filter BEFORE the distinct shuffle
-      .distinct()
-      // hamming-0: every distinct value paired with itself — identical
-      // docs fall out of the SAME expansion joins below, so no separate
-      // doc-level equi-self-join + union is needed
-      .unionByName(values.select(col("sh").as("sh1"), col("sh").as("sh2"),
-        lit(0L).as("hamming")))
-    // expand value pairs to document pairs (id order normalized; the
-    // sh1==sh2 self-pairs produce each unordered pair twice → keep one)
-    shPairs
-      .join(docs.select(col("sh").as("sh1"), col("id").as("ida")), "sh1")
-      .join(docs.select(col("sh").as("sh2"), col("id").as("idb")), "sh2")
-      .where(col("sh1") =!= col("sh2") || col("ida") < col("idb"))
-      .select(least(col("ida"), col("idb")).as("id1"),
-        greatest(col("ida"), col("idb")).as("id2"), col("hamming"))
-  }
+                   maxDist: Int = 3): DataFrame =
+    Banded.hammingPairs(
+      df.select(col(idCol).as("id"), simhash64(col(textCol)).as("h")),
+      h => (0 until 4).map(b => shiftright(h, b * 15).bitwiseAND(0x7fffL)),
+      maxDist)
 
   /** Duplicate-cluster assignment: connected components over a pair
     * graph, labeling every node with the MIN id reachable from it (the
@@ -651,8 +574,9 @@ object Dedup {
     * Scale shape (100 TB): each vector is hashed ONCE map-side into
     * `tables`×`planesPerTable` sign bits (deterministic md5-derived
     * planes, [[Similarity.srpSignature]]); candidates only form inside
-    * identical (table, bucket) keys — a plain shuffle equi-join, never
-    * all-pairs — and the exact cosine runs only on the candidate set.
+    * identical (table, bucket) keys — bucket-local expansion
+    * ([[Banded.selfPairs]]), never all-pairs — and the exact cosine runs
+    * only on the candidate set.
     * Recall: two vectors at angle θ share one table's bucket with
     * probability (1 - θ/π)^planesPerTable, amplified by `tables`
     * independent tables; raise `tables` for recall, `planesPerTable`
@@ -668,19 +592,9 @@ object Dedup {
     val mat = sharedPersist(
       df.select(col(idCol).as("id"), v.as("v"),
         Similarity.srpSignature(v, dim, planesPerTable * tables).as("sigall")))
-    val bucketed = mat.select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(tables - 1)), t =>
-          concat(t.cast("string"), lit(":"), concat_ws(",",
-            transform(slice(col("sigall"), t * planesPerTable + 1, lit(planesPerTable)),
-              b => b.cast("string")))))))
-      .withColumnRenamed("pos", "table").withColumnRenamed("col", "bucket")
-    // bucket-grouped pair expansion (round-13): one exchange of
-    // (table, bucket, id) instead of the former sort-merge self-join's
-    // two + two sorts — see inBucketPairs
-    val cands = inBucketPairs(
-      bucketed.select(col("table"), col("bucket"), col("id")),
-      Seq("table", "bucket"), Int.MaxValue).distinct()
-    cands
+    val bucketed = Banded.buckets(mat,
+      Similarity.srpBandKeys(col("sigall"), tables, planesPerTable), col("id"))
+    Banded.selfPairs(bucketed).distinct()
       .join(mat.select(col("id").as("id1"), col("v").as("v1")), "id1")
       .join(mat.select(col("id").as("id2"), col("v").as("v2")), "id2")
       .withColumn("cos", round(
@@ -722,11 +636,10 @@ object Dedup {
     * aggregation — the corpus never shuffles for it; candidate pairs
     * form only inside a cluster, the paper's tractability trick — k
     * grows with n so cluster sizes stay bounded (SemDeDup used k=50,000
-    * on LAION-440M). The self-join on the cell id pins sort-merge like
-    * every other banded candidate join here (no pre-explode broadcast
-    * misestimate); its payload is the vectors themselves, so at extreme
-    * scale feed [[Similarity.scalarQuantize]]d vectors to cut the
-    * shuffle 8×.
+    * on LAION-440M). The self-join on the cell id is pinned to
+    * sort-merge: both sides carry the vectors themselves, so neither is
+    * a broadcast-sized dimension, and at extreme scale feed
+    * [[Similarity.scalarQuantize]]d vectors to cut the shuffle 8×.
     *
     * Determinism: assignment tie-breaks min-cell (same min(struct) as
     * [[Similarity.ivfAssign]]); the keep rule tie-breaks on id; all

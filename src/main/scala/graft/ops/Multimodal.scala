@@ -303,7 +303,7 @@ object Multimodal {
 
   /** Image near-dup pairs — text simhash's banded-Hamming shape applied
     * to [[imageDHash]]: one codegen'd decode+hash pass per image, the
-    * band self-join over DISTINCT hash values (4 bands × 14 bits; by
+    * band self-pairs over DISTINCT hash values (4 bands × 14 bits; by
     * pigeonhole any pair within `maxDist` ≤ 3 shares a band), bit_count
     * filter BEFORE the distinct shuffle, then value pairs expand to
     * image id pairs. Sub-quadratic at any corpus size for the same
@@ -427,46 +427,30 @@ object Multimodal {
     * incrementally, at ingest time. Output:
     * (new_id, corpus_id, hamming = min). */
   def temporalNearDupAgainst(newIndex: DataFrame, corpusIndex: DataFrame,
-                             maxDist: Int = 3): DataFrame = {
-    def banded(df: DataFrame, idAs: String, dhAs: String) =
-      df.select(col("id").as(idAs), col("dh").as(dhAs),
-        posexplode(array(bandCols(col("dh"), maxDist): _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
-    banded(Dedup.sharedPersist(newIndex), "new_id", "dh1")
-      .join(banded(corpusIndex, "corpus_id", "dh2").hint("merge"),
-        Seq("band", "band_key"))
-      .select(col("new_id"), col("corpus_id"),
-        bit_count(col("dh1").bitwiseXOR(col("dh2"))).cast("long")
-          .as("hamming"))
-      .where(col("hamming") <= maxDist)
+                             maxDist: Int = 3): DataFrame =
+    hammingAgainst(newIndex, corpusIndex, maxDist)
       .groupBy(col("new_id"), col("corpus_id"))
       .agg(min(col("hamming")).as("hamming"))
-  }
 
   /** Shared any-to-any temporal matcher: explode a per-clip hash
-    * ARRAY, banded Hamming self-join, min pairwise distance per pair.
+    * ARRAY, banded Hamming self-pairs, min pairwise distance per pair.
     * `explode_outer` BEFORE filtering — a plain explode would let the
     * optimizer infer `size(hashes) > 0` and push it below the
     * projection, re-evaluating the whole-payload hash walk 3× per row
     * (plan-audited); the outer form keeps exactly one evaluation and
-    * the null rows drop right after. */
+    * the null rows drop right after. (id, dh) structs order id-first,
+    * so id1 < id2 drops a clip's pairs with itself. */
   private def temporalHashPairs(media: DataFrame, idCol: String,
                                 hashes: Column, maxDist: Int): DataFrame = {
     val vh = Dedup.sharedPersist(
       media.select(col(idCol).as("id"), explode_outer(hashes).as("dh"))
         .where(col("dh").isNotNull)
         .distinct()) // a clip's repeated sub-hashes collapse up front
-    val banded = vh.select(col("id"), col("dh"),
-      posexplode(array(bandCols(col("dh"), maxDist): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
-    val l = banded.select(col("band"), col("band_key"),
-      col("id").as("ida"), col("dh").as("dh1"))
-    val r = banded.select(col("band"), col("band_key"),
-      col("id").as("idb"), col("dh").as("dh2"))
-    l.join(r.hint("merge"), Seq("band", "band_key"))
-      .where(col("ida") < col("idb"))
-      .select(col("ida").as("id1"), col("idb").as("id2"),
-        bit_count(col("dh1").bitwiseXOR(col("dh2"))).cast("long")
+    Banded.selfPairs(Banded.buckets(vh, array(bandCols(col("dh"), maxDist): _*),
+        struct(col("id"), col("dh")).as("id")))
+      .where(col("id1.id") < col("id2.id"))
+      .select(col("id1.id").as("id1"), col("id2.id").as("id2"),
+        bit_count(col("id1.dh").bitwiseXOR(col("id2.dh"))).cast("long")
           .as("hamming"))
       .where(col("hamming") <= maxDist)
       .groupBy(col("id1"), col("id2"))
@@ -539,22 +523,27 @@ object Multimodal {
     * within `maxDist` Hamming of an EXISTING corpus's
     * [[mediaHashIndex]]. Only the new batch decodes; candidates are
     * (band, band_key) matches against the index (same pigeonhole recall
-    * as the self-join path). Output: (new_id, corpus_id, hamming). */
+    * as the within-corpus path). Output: (new_id, corpus_id, hamming). */
   def mediaNearDupAgainst(newMedia: DataFrame, idCol: String, hash: Column,
                           corpusIndex: DataFrame,
-                          maxDist: Int = 3): DataFrame = {
-    val nh = Dedup.sharedPersist(mediaHashIndex(newMedia, idCol, hash))
+                          maxDist: Int = 3): DataFrame =
+    hammingAgainst(mediaHashIndex(newMedia, idCol, hash), corpusIndex, maxDist)
+      .distinct()
+
+  /** Cross-corpus banded Hamming candidates between two (id, dh) hash
+    * frames: one (new_id, corpus_id, hamming ≤ maxDist) row per shared
+    * band ([[Banded.crossPairs]]); callers collapse the repeats. The new
+    * side is persisted — it is the per-ingest decode. */
+  private def hammingAgainst(newIndex: DataFrame, corpusIndex: DataFrame,
+                             maxDist: Int): DataFrame = {
     def banded(df: DataFrame, idAs: String, dhAs: String) =
-      df.select(col("id").as(idAs), col("dh").as(dhAs),
-        posexplode(array(bandCols(col("dh"), maxDist): _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
-    banded(nh, "new_id", "dh1")
-      .join(banded(corpusIndex, "corpus_id", "dh2").hint("merge"),
-        Seq("band", "band_key"))
+      Banded.buckets(df, array(bandCols(col("dh"), maxDist): _*),
+        col("id").as(idAs), col("dh").as(dhAs))
+    Banded.crossPairs(banded(Dedup.sharedPersist(newIndex), "new_id", "dh1"),
+        banded(corpusIndex, "corpus_id", "dh2"))
       .select(col("new_id"), col("corpus_id"),
         bit_count(col("dh1").bitwiseXOR(col("dh2"))).cast("long").as("hamming"))
       .where(col("hamming") <= maxDist)
-      .distinct()
   }
 
   /** Band decomposition of the ≤56-bit perceptual hashes: `maxDist + 1`
@@ -577,38 +566,18 @@ object Multimodal {
                                  hash: Column, maxDist: Int): DataFrame =
     hashNearDupPairs(mediaHashIndex(media, idCol, hash), maxDist)
 
-  /** The banded-Hamming self-join over an ALREADY-COMPUTED
-    * [[mediaHashIndex]] frame (columns `id`, `dh`; extra columns are
-    * dropped) — the decode-once entry point: a corpus whose perceptual
-    * hashes are materialized (the 100 TB parquet artifact, or the
-    * per-session fixture) pays the payload decode zero times per
-    * near-dup run. Same pipeline, guarantees, and output as the
-    * decode-inline form ([[imageNearDupPairs]] etc.), which now
-    * delegates here. */
-  def hashNearDupPairs(index: DataFrame, maxDist: Int = 3): DataFrame = {
-    val imgs = Dedup.sharedPersist(
-      index.select(col("id"), col("dh")).where(col("dh").isNotNull))
-    val values = imgs.select(col("dh")).distinct()
-    val banded = values.select(col("dh"),
-      posexplode(array(bandCols(col("dh"), maxDist): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
-    val l = banded.select(col("band"), col("band_key"), col("dh").as("dh1"))
-    val r = banded.select(col("band"), col("band_key"), col("dh").as("dh2"))
-    val dhPairs = l.join(r.hint("merge"), Seq("band", "band_key"))
-      .where(col("dh1") < col("dh2"))
-      .select(col("dh1"), col("dh2"),
-        bit_count(col("dh1").bitwiseXOR(col("dh2"))).cast("long").as("hamming"))
-      .where(col("hamming") <= maxDist)
-      .distinct()
-      .unionByName(values.select(col("dh").as("dh1"), col("dh").as("dh2"),
-        lit(0L).as("hamming")))
-    dhPairs
-      .join(imgs.select(col("dh").as("dh1"), col("id").as("ida")), "dh1")
-      .join(imgs.select(col("dh").as("dh2"), col("id").as("idb")), "dh2")
-      .where(col("dh1") =!= col("dh2") || col("ida") < col("idb"))
-      .select(least(col("ida"), col("idb")).as("id1"),
-        greatest(col("ida"), col("idb")).as("id2"), col("hamming"))
-  }
+  /** The banded-Hamming near-dup pairs ([[Banded.hammingPairs]]) over
+    * an ALREADY-COMPUTED [[mediaHashIndex]] frame (columns `id`, `dh`;
+    * extra columns are dropped) — the decode-once entry point: a corpus
+    * whose perceptual hashes are materialized (the 100 TB parquet
+    * artifact, or the per-session fixture) pays the payload decode zero
+    * times per near-dup run. Same pipeline, guarantees, and output as the
+    * decode-inline form ([[imageNearDupPairs]] etc.), which delegates
+    * here. */
+  def hashNearDupPairs(index: DataFrame, maxDist: Int = 3): DataFrame =
+    Banded.hammingPairs(
+      index.select(col("id"), col("dh").as("h")).where(col("h").isNotNull),
+      bandCols(_, maxDist), maxDist)
 
   /** One REAL PNG image (RFC 2083): 8-bit RGB, per-row filters CYCLING
     * through all five types (a real encoder's shape — None/Sub/Up/

@@ -121,9 +121,18 @@ object Similarity {
     sigUdf(vec)
   }
 
+  /** Per-table SRP bucket keys of a `tables`·`planesPerTable`-bit
+    * [[srpSignature]]: `"t:b0,b1,…"` for table t's slice of sign bits —
+    * the band keys [[Banded.buckets]] fans out over. */
+  def srpBandKeys(sigall: Column, tables: Int, planesPerTable: Int): Column =
+    transform(sequence(lit(0), lit(tables - 1)), t =>
+      concat(t.cast("string"), lit(":"), concat_ws(",",
+        transform(slice(sigall, t * planesPerTable + 1, lit(planesPerTable)),
+          b => b.cast("string")))))
+
   /** LSH-bucketed approximate top-k: corpus and queries hashed to SRP
-    * buckets; candidates = same-bucket pairs (equi-join on the bucket
-    * key), re-ranked by exact cosine. Recall grows with `tables`. */
+    * buckets; candidates = same-bucket pairs ([[Banded.crossPairs]]),
+    * re-ranked by exact cosine. Recall grows with `tables`. */
   def lshTopK(queries: DataFrame, corpus: DataFrame,
               qId: String, qVec: String, cId: String, cVec: String,
               k: Int, dim: Int, planesPerTable: Int = 8, tables: Int = 4): DataFrame = {
@@ -136,16 +145,12 @@ object Similarity {
       val mat = Dedup.sharedPersist(
         df.select(col(id).as(idOut), v.as(idOut + "_v"),
           srpSignature(v, dim, planesPerTable * tables).as("sigall")))
-      mat.select(col(idOut), col(idOut + "_v"),
-        posexplode(transform(sequence(lit(0), lit(tables - 1)), t =>
-          concat(t.cast("string"), lit(":"), concat_ws(",",
-            transform(slice(col("sigall"), t * planesPerTable + 1, lit(planesPerTable)),
-              b => b.cast("string")))))))
-        .withColumnRenamed("pos", "table").withColumnRenamed("col", "bucket")
+      Banded.buckets(mat, srpBandKeys(col("sigall"), tables, planesPerTable),
+        col(idOut), col(idOut + "_v"))
     }
     val qb = bucketed(queries, qId, qVec, "query_id")
     val cb = bucketed(corpus, cId, cVec, "corpus_id")
-    val cands = qb.join(cb.hint("merge"), Seq("table", "bucket"))
+    val cands = Banded.crossPairs(qb, cb)
       .where(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("query_id_v").as("qv"),
         col("corpus_id"), col("corpus_id_v").as("cv"))

@@ -1150,12 +1150,14 @@ class OpsSpec extends AnyFunSuite {
     val bcast = RangeJoin.pointInInterval(points, intervals,
       bucketWidth = 16L, broadcastIntervals = true)
     assert(bcast.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
-    // the LSH candidate self-join carries the same pin
+    // LSH candidates within one corpus need no join at all: ids group
+    // per bucket and expand bucket-locally (Banded.selfPairs)
     val sigs = Seq((1L, Seq(1L, 2L), Seq(10L)), (2L, Seq(1L, 2L), Seq(10L)),
       (3L, Seq(9L, 9L), Seq(11L))).toDF("id", "sig", "hs")
     val lshPlan = Dedup.lshCandidatePairs(sigs, bands = 2)
       .queryExecution.executedPlan.toString
-    assert(lshPlan.contains("SortMergeJoin"))
+    assert(!lshPlan.contains("Join"))
+    assert(lshPlan.contains("HashAggregate") && lshPlan.contains("Generate"))
   }
 
   test("HITS separates link-soup hubs from linked-to authorities") {
