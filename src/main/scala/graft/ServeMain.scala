@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.queries.TsQueries
 import graft.remote.{RemoteReadServer, RemoteWrite}
-import graft.tsdb.{Labels, TsQuerier, TsStore}
+import graft.tsdb.{BlockIO, Labels, TsQuerier, TsStore}
+import graft.tsdb.datasource.BlockSelect
+import org.apache.hadoop.conf.Configuration
 
 /** Remote-read/-write server entry point (the reference's `server`
   * subcommand, `main.go:47-81`, plus beyond-reference `/write` and the
@@ -16,11 +18,13 @@ import graft.tsdb.{Labels, TsQuerier, TsStore}
   *  - a dir containing `events.parquet` → served read-only via the
   *    events mapping;
   *  - a dir of native TSDB BLOCKS (`<ulid>/meta.json` children — the
-  *    reference's own on-disk format) → served read-only through the
-  *    graft-tsdb DSv2 source; the canonical view is cached and
-  *    rebuilt when the ULID set changes, so a newly-shipped block is
-  *    visible on the next request (the reference re-locks its block
-  *    list per query, `querier.go:25-46`);
+  *    reference's own on-disk format) → served read-only through
+  *    [[BlocksView]]: `/read` straight from the block indexes and
+  *    chunks on the driver (no Spark job), PromQL and the `/api/v1`
+  *    endpoints through the graft-tsdb DSv2 source over a cached
+  *    canonical view; both are rebuilt when the ULID set changes, so a
+  *    newly-shipped block is visible on the next request (the reference
+  *    re-locks its block list per query, `querier.go:25-46`);
   *  - otherwise treated as a canonical store written by TsStore.write /
   *    TsdbBlock.ingest — served for reads AND accepting remote-write
   *    appends (each read resolves a fresh store view).
@@ -32,26 +36,39 @@ object ServeMain {
 
   /** Non-hidden children of `dir` that look like TSDB blocks
     * (`<name>/meta.json` present). */
-  def blockUlids(dir: String): Seq[String] = graft.tsdb.BlockIO.listNames(dir)
-    .filter(n => graft.tsdb.BlockIO.exists(graft.tsdb.BlockIO.child(
-      graft.tsdb.BlockIO.child(dir, n), "meta.json"))).sorted
+  def blockUlids(dir: String, conf: Configuration = null): Seq[String] =
+    BlockIO.listNames(dir, conf)
+      .filter(n => BlockIO.exists(BlockIO.child(BlockIO.child(dir, n), "meta.json"), conf))
+      .sorted
 
-  /** Cached canonical view over a native block dir, rebuilt when the
-    * ULID set changes — each rebuild re-plans the DSv2 relation so new
-    * blocks' postings participate; the stale view is unpersisted. */
+  /** The store view over a native block dir, rebuilt when the ULID set
+    * changes. Each rebuild reads the blocks' metas once into a
+    * driver-local [[BlockSelect]], which answers remote-read
+    * (`TsQuerier.streamSelect`) from the index and chunks with no Spark
+    * job, and re-plans the DSv2 relation into a canonical view cached
+    * lazily for PromQL and the `/api/v1` endpoints (filled by the first
+    * query that scans it; the stale one is unpersisted). All block IO
+    * goes through the session's Hadoop conf, captured here, so it keeps
+    * the `--config` settings on threads with no active session (the
+    * HTTP pool). */
   final class BlocksView(spark: SparkSession, dir: String) {
+    private val conf = spark.sparkContext.hadoopConfiguration
     private var key: Seq[String] = null
     private var view: org.apache.spark.sql.DataFrame = null
+    private var local: BlockSelect = null
     def querier(): TsQuerier = synchronized {
-      val ulids = blockUlids(dir)
+      val ulids = blockUlids(dir, conf)
       if (ulids != key) {
         if (view != null) view.unpersist(false)
+        // the DSv2 source infers the schema through the active session
+        SparkSession.setActiveSession(spark)
         view = graft.tsdb.TsSchema.canonicalize(
           spark.read.format("graft-tsdb").load(dir)
             .select(col("labels"), col("t"), col("v"))).cache()
+        local = BlockSelect.open(ulids.map(BlockIO.child(dir, _)), conf)
         key = ulids
       }
-      new TsQuerier(view)
+      new TsQuerier(view, localSelect = Some(local.select))
     }
   }
 
@@ -77,7 +94,8 @@ object ServeMain {
     val port = if (args.length > 1) args(1).toInt else 19090
     val isEventsDir = graft.tsdb.BlockIO.exists(
       graft.tsdb.BlockIO.child(dir, "events.parquet"))
-    val isBlocksDir = !isEventsDir && blockUlids(dir).nonEmpty
+    val isBlocksDir = !isEventsDir &&
+      blockUlids(dir, spark.sparkContext.hadoopConfiguration).nonEmpty
     val blocksView = if (isBlocksDir) new BlocksView(spark, dir) else null
     def querier: TsQuerier =
       if (isEventsDir)

@@ -4,7 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.net.InetSocketAddress
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.xerial.snappy.Snappy
-import graft.tsdb.{LabelMatcher, MatchType, Sample, SampleStream, TsQuerier}
+import graft.tsdb.{ChunkFile, LabelMatcher, MatchType, Sample, SampleStream, TsQuerier}
 
 /** Prometheus remote-read protocol front-end — the reference's only query
   * entry point (`server.go:51,64-97`; SURVEY.md §2.1 S10, §3.1).
@@ -415,6 +415,13 @@ final class RemoteReadServer(querier: => TsQuerier, port: Int = 0, threads: Int 
   // by-name querier: each request resolves a FRESH store view (the
   // reference re-locks its block list per query, querier.go:25-46), so
   // data appended between requests — e.g. via /write — is visible
+  //
+  // TCP_NODELAY on every accepted connection: without it Nagle's
+  // algorithm holds a response's body segment until the client's
+  // delayed ACK for the headers arrives, ~40 ms per request. The JDK
+  // server reads the property once, when its config class loads, so it
+  // is set before the first server is created.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // default HttpServer executor runs handlers on the dispatch thread,
   // serializing all requests; a pool lets concurrent reads overlap their
@@ -432,16 +439,36 @@ final class RemoteReadServer(querier: => TsQuerier, port: Int = 0, threads: Int 
       _ => new java.util.concurrent.atomic.AtomicLong()).incrementAndGet()
     ()
   }
+  // remote-read selects by how they ran: "native" (driver-local, from
+  // the block index) or "spark" (a Dataset job, the fallback)
+  private val selects =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
 
   server.createContext("/metrics", (ex: HttpExchange) => {
     hit("/metrics")
     import scala.jdk.CollectionConverters._
-    val lines = Seq(
-      "# HELP graft_http_requests_total Requests served per endpoint.",
-      "# TYPE graft_http_requests_total counter") ++
-      requestCounts.asScala.toSeq.sortBy(_._1).map { case (p, c) =>
-        s"""graft_http_requests_total{path="$p"} ${c.get}"""
-      }
+    def family(name: String, kind: String, help: String, samples: Seq[(String, Long)]) =
+      Seq(s"# HELP $name $help", s"# TYPE $name $kind") ++
+        samples.map { case (labels, v) => s"$name$labels $v" }
+    def byLabel(label: String, m: java.util.concurrent.ConcurrentHashMap[String,
+        java.util.concurrent.atomic.AtomicLong]) =
+      m.asScala.toSeq.sortBy(_._1).map { case (k, c) => (s"""{$label="$k"}""", c.get) }
+    val lines =
+      family("graft_http_requests_total", "counter", "Requests served per endpoint.",
+        byLabel("path", requestCounts)) ++
+      family("graft_remote_read_selects_total", "counter",
+        "Remote-read selects by execution path (native: driver-local; spark: a Spark job).",
+        byLabel("path", selects)) ++
+      family("graft_chunk_cache_hits_total", "counter", "Chunk record cache hits in this JVM.",
+        Seq("" -> ChunkFile.RecordCache.hits)) ++
+      family("graft_chunk_cache_misses_total", "counter", "Chunk record cache misses in this JVM.",
+        Seq("" -> ChunkFile.RecordCache.misses)) ++
+      family("graft_chunk_cache_evictions_total", "counter", "Chunk record cache evictions in this JVM.",
+        Seq("" -> ChunkFile.RecordCache.evictions)) ++
+      family("graft_chunk_cache_bytes", "gauge", "Bytes held by the chunk record cache.",
+        Seq("" -> ChunkFile.RecordCache.currentBytes)) ++
+      family("graft_chunk_bytes_fetched_total", "counter", "Chunk segment bytes read from storage.",
+        Seq("" -> ChunkFile.bytesFetched.get))
     val body = (lines.mkString("\n") + "\n").getBytes("UTF-8")
     ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4")
     ex.sendResponseHeaders(200, body.length)
@@ -463,10 +490,13 @@ final class RemoteReadServer(querier: => TsQuerier, port: Int = 0, threads: Int 
       if (ex.getRequestMethod != "POST") {
         ex.sendResponseHeaders(405, -1); ex.close()
       } else {
-        val body = ex.getRequestBody.readAllBytes()
-        val (queries, accepted) =
-          Proto.decodeReadRequestFull(Snappy.uncompress(body))
-        import scala.jdk.CollectionConverters._
+        val (queries, accepted) = RemoteReadServer.parseRequest(ex.getRequestBody.readAllBytes())
+        val q = querier
+        def select(query: Proto.Query): Iterator[SampleStream] = {
+          selects.computeIfAbsent(if (q.hasLocalSelect) "native" else "spark",
+            _ => new java.util.concurrent.atomic.AtomicLong()).incrementAndGet()
+          q.streamSelect(query.startMs, query.endMs, query.matchers)
+        }
         if (accepted.contains(Proto.RespStreamedXorChunks)) {
           // modern streamed path: each ChunkedReadResponse frame goes out
           // as soon as it fills — neither side ever buffers the full
@@ -476,22 +506,16 @@ final class RemoteReadServer(querier: => TsQuerier, port: Int = 0, threads: Int 
           ex.sendResponseHeaders(200, 0) // chunked transfer
           headersSent = true
           val os = ex.getResponseBody
-          queries.zipWithIndex.foreach { case (q, i) =>
-            Proto.writeChunkedFrames(
-              querier.selectStreams(q.startMs, q.endMs, q.matchers)
-                .toLocalIterator().asScala,
-              i.toLong, b => { os.write(b); os.flush() })
+          queries.zipWithIndex.foreach { case (query, i) =>
+            Proto.writeChunkedFrames(select(query), i.toLong, b => { os.write(b); os.flush() })
           }
           ex.close()
         } else {
-          // toLocalIterator: the driver holds one task's series at a time
-          // plus the growing ENCODED buffer — peak memory is bounded by
-          // the wire size of the response, not by materialized row objects
-          val resp = Snappy.compress(Proto.encodeReadResponseStreaming(
-            queries.map { q =>
-              querier.selectStreams(q.startMs, q.endMs, q.matchers)
-                .toLocalIterator().asScala
-            }))
+          // series stream in (one Spark task's worth at a time on the
+          // fallback), and only the growing ENCODED buffer is held —
+          // peak memory is bounded by the wire size of the response, not
+          // by materialized row objects
+          val resp = Snappy.compress(Proto.encodeReadResponseStreaming(queries.map(select)))
           ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
           ex.getResponseHeaders.set("Content-Encoding", "snappy")
           ex.sendResponseHeaders(200, resp.length)
@@ -502,8 +526,10 @@ final class RemoteReadServer(querier: => TsQuerier, port: Int = 0, threads: Int 
       }
     } catch {
       case e: Exception if !headersSent =>
+        // 400 only for the request itself; any other failure is ours
+        val status = if (e.isInstanceOf[RemoteReadServer.BadRequest]) 400 else 500
         val msg = ("remote read error: " + e.getMessage).getBytes("UTF-8")
-        ex.sendResponseHeaders(400, msg.length)
+        ex.sendResponseHeaders(status, msg.length)
         ex.getResponseBody.write(msg)
         ex.close()
       case _: Exception =>
@@ -965,6 +991,21 @@ final class RemoteReadServer(querier: => TsQuerier, port: Int = 0, threads: Int 
 
   def start(): Int = { server.start(); server.getAddress.getPort }
   def stop(): Unit = { server.stop(0); pool.shutdown() }
+}
+
+object RemoteReadServer {
+  /** A request the server cannot answer as sent: bad snappy, bad
+    * protobuf, or an invalid matcher or regex (→ 400). */
+  final class BadRequest(cause: Throwable) extends Exception(cause.getMessage, cause)
+
+  /** Decode a `/read` body and compile every matcher, so a malformed
+    * request fails here, before any header is sent, as a [[BadRequest]]. */
+  def parseRequest(body: Array[Byte]): (Seq[Proto.Query], Set[Int]) =
+    try {
+      val parsed = Proto.decodeReadRequestFull(Snappy.uncompress(body))
+      parsed._1.foreach(_.matchers.foreach(_.evaluator))
+      parsed
+    } catch { case e: Exception => throw new BadRequest(e) }
 }
 
 /** Parameter parsing + Prometheus-matrix JSON encoding for the

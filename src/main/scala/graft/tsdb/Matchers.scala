@@ -46,6 +46,21 @@ final case class LabelMatcher(tpe: MatchType, name: String, value: String) {
     case MatchType.Prefix => valueCol.startsWith(value)
   }
 
+  /** [[predicate]] as a driver-side function, deciding exactly as
+    * Catalyst does: binary string comparison, and `rlike`'s
+    * `matcher(s).find()` over the anchored pattern (so `$` also matches
+    * before a final line terminator). The regex compiles here, so an
+    * invalid pattern throws at construction, not at the first value. */
+  def evaluator: String => Boolean = tpe match {
+    case MatchType.Eq     => _ == value
+    case MatchType.Neq    => _ != value
+    case MatchType.Re | MatchType.NotRe =>
+      val p = java.util.regex.Pattern.compile(LabelMatcher.anchored(value))
+      val want = tpe == MatchType.Re
+      s => p.matcher(s).find() == want
+    case MatchType.Prefix => _.startsWith(value)
+  }
+
   /** Plain-Scala evaluation (for the brute-force test oracle). */
   def matches(v: String): Boolean = tpe match {
     case MatchType.Eq     => v == value

@@ -97,8 +97,14 @@ object TsSchema {
 
 /** Querier over a canonical samples DataFrame — the `tsdb.Querier`
   * interface (`vendor/.../tsdb/querier.go:27-40`): `select`,
-  * `labelValues`, `labelNames`, over a time range + matcher set. */
-final class TsQuerier(data: DataFrame, promoted: Seq[String] = TsSchema.DefaultPromoted) {
+  * `labelValues`, `labelNames`, over a time range + matcher set.
+  *
+  * `localSelect`, when given, answers [[streamSelect]] on the driver
+  * with output equal to [[selectStreams]] over `data` (a native block
+  * dir's index and chunks, `graft.tsdb.datasource.BlockSelect`); every
+  * other method runs on `data`. */
+final class TsQuerier(data: DataFrame, promoted: Seq[String] = TsSchema.DefaultPromoted,
+                      localSelect: Option[(Long, Long, Seq[LabelMatcher]) => Iterator[SampleStream]] = None) {
   import TsSchema._
 
   private def valueCol(name: String): Column =
@@ -136,6 +142,20 @@ final class TsQuerier(data: DataFrame, promoted: Seq[String] = TsSchema.DefaultP
       .select(map_from_entries(col("labels")).as("labels"), col("samples"))
       .as[SampleStream]
   }
+
+  /** True when [[streamSelect]] runs driver-local, with no Spark job. */
+  def hasLocalSelect: Boolean = localSelect.isDefined
+
+  /** [[selectStreams]] as a driver-side iterator — what remote-read
+    * serves: the driver-local select when there is one, else the
+    * Dataset's `toLocalIterator` (one task's series at a time). */
+  def streamSelect(mint: Long, maxt: Long, matchers: Seq[LabelMatcher]): Iterator[SampleStream] =
+    localSelect match {
+      case Some(f) => f(mint, maxt, matchers)
+      case None =>
+        import scala.jdk.CollectionConverters._
+        selectStreams(mint, maxt, matchers).toLocalIterator().asScala
+    }
 
   /** Sorted distinct values of one label across all blocks — `LabelValues`
     * + cross-block k-way distinct merge (J3, `querier.go:48-69,286-312`).

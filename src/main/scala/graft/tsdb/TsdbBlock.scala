@@ -42,9 +42,10 @@ object TsdbBlock {
 
   def readMeta(dir: java.nio.file.Path): BlockMeta = readMeta(dir.toString)
 
-  def readMeta(dir: String): BlockMeta = {
+  def readMeta(dir: String,
+               conf: org.apache.hadoop.conf.Configuration = null): BlockMeta = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val n = mapper.readTree(BlockIO.readString(BlockIO.child(dir, "meta.json")))
+    val n = mapper.readTree(BlockIO.readString(BlockIO.child(dir, "meta.json"), conf))
     require(n.get("version").asInt() == 1, "unsupported block meta version")
     BlockMeta(
       n.get("ulid").asText(),

@@ -50,4 +50,40 @@ class ServeBlocksSpec extends AnyFunSuite {
       assert(ServeMain.blockUlids(root.toString).size == 2)
     } finally server.stop()
   }
+
+  test("a block dir on a session-only filesystem serves from a thread with no active session") {
+    val root = Files.createTempDirectory("graft-serve-session-fs")
+    TsdbBlock.write(root.resolve("b1"), series("up", 20, 1700000000000L),
+      TsdbBlock.syntheticUlid(1))
+    // the scheme exists only in the session's Hadoop conf, uncached, so
+    // a fresh Configuration cannot resolve it
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.sessiononly.impl", classOf[SessionOnlyFs].getName)
+    conf.setBoolean("fs.sessiononly.impl.disable.cache", true)
+    try {
+      val dir = "sessiononly://" + root.toString
+      val view = new ServeMain.BlocksView(spark, dir)
+      val q = graft.tsdb.LabelMatcher.eq("__name__", "up")
+      val out = new java.util.concurrent.atomic.AtomicReference[Any]()
+      val bare = new Thread(() => {
+        org.apache.spark.sql.SparkSession.clearActiveSession()
+        out.set(try view.querier().streamSelect(0L, Long.MaxValue, Seq(q)).toVector
+          catch { case e: Throwable => e })
+      })
+      bare.start(); bare.join()
+      assert(out.get == Vector(graft.tsdb.SampleStream(Map("__name__" -> "up", "job" -> "api"),
+        (0 until 20).map(i => Sample(1700000000000L + i * 15000L, i.toDouble)))), out.get)
+      // the Spark path over the same view agrees
+      assert(view.querier().selectStreams(0L, Long.MaxValue, Seq(q)).collect().toVector == out.get)
+    } finally {
+      conf.unset("fs.sessiononly.impl")
+      conf.unset("fs.sessiononly.impl.disable.cache")
+    }
+  }
+}
+
+/** The local filesystem under the scheme `sessiononly`. */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("sessiononly:///")
+  override def getScheme: String = "sessiononly"
 }

@@ -252,6 +252,40 @@ class RemoteReadServerSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("/read status: invalid regex or matcher type → 400, querier throws → 500") {
+    var fail = false
+    val server = new RemoteReadServer(
+      if (fail) throw new IllegalStateException("store unavailable") else mkQuerier)
+    val port = server.start()
+    try {
+      val http = HttpClient.newHttpClient()
+      def post(body: Array[Byte]) = http.send(
+        HttpRequest.newBuilder(new URI(s"http://127.0.0.1:$port/read"))
+          .POST(HttpRequest.BodyPublishers.ofByteArray(Snappy.compress(body))).build(),
+        HttpResponse.BodyHandlers.ofString())
+      def read(m: LabelMatcher, types: Seq[Int]) = post(Proto.encodeReadRequest(
+        Seq(Proto.Query(1700000000000L, 1700000300000L, Seq(m))), types))
+      for (types <- Seq(Seq(Proto.RespSamples), Seq(Proto.RespStreamedXorChunks))) {
+        // a regex that does not compile is the client's error, on both
+        // paths, before the streamed path commits its headers
+        val badRe = read(LabelMatcher(MatchType.Re, "job", "api("), types)
+        assert(badRe.statusCode() == 400 && badRe.body().contains("remote read error"), badRe.body())
+        assert(read(LabelMatcher.eq("job", "api"), types).statusCode() == 200)
+      }
+      // matcher type 7 does not exist in remote.proto
+      val w = new Proto.W
+      val mw = new Proto.W; mw.i64(1, 7); mw.str(2, "job"); mw.str(3, "api")
+      val qw = new Proto.W; qw.i64(1, 0); qw.i64(2, 1); qw.msg(3, mw)
+      w.msg(1, qw)
+      assert(post(w.bytes).statusCode() == 400)
+      // a failure of the server's own, before the headers: 500
+      fail = true
+      val internal = read(LabelMatcher.eq("job", "api"), Seq(Proto.RespSamples))
+      assert(internal.statusCode() == 500 && internal.body().contains("store unavailable"),
+        internal.body())
+    } finally server.stop()
+  }
+
   test("GET /api/v1/query_range evaluates PromQL and returns a matrix") {
     val server = new RemoteReadServer(mkQuerier)
     val port = server.start()
@@ -423,10 +457,14 @@ class RemoteReadServerSpec extends AnyFunSuite {
       val metrics = get("/metrics")
       assert(metrics.statusCode() == 200)
       val mlines = metrics.body().split("\n").toSeq
-      val parsed = graft.tsdb.Exposition.parse(
+      val rows = graft.tsdb.Exposition.parse(
         mlines.toDF("line"), org.apache.spark.sql.functions.col("line"),
         org.apache.spark.sql.functions.lit(0L))
-        .collect().map(r => (r.getMap[String, String](0)("path"), r.getDouble(2))).toMap
+        .collect().map(r => (r.getMap[String, String](0), r.getDouble(2)))
+      // every sample line parses; the request counters are checked here
+      assert(rows.length == mlines.count(l => l.nonEmpty && !l.startsWith("#")))
+      val parsed = rows.collect { case (ls, v) if ls("__name__") == "graft_http_requests_total" =>
+        ls("path") -> v }.toMap
       // two /federate hits above (one OK, one 400) both count
       assert(parsed("/federate") == 2.0 && parsed("/metrics") == 1.0,
         s"counters: $parsed")
@@ -468,10 +506,13 @@ class RemoteReadServerSpec extends AnyFunSuite {
         metadataPath = Some(meta)) >= 1)
       Scraper.scrapeOnce(spark, u, store, 1700000060000L,
         metadataPath = Some(meta))
+      // one metadata row per family the server declares
+      val declared = scala.io.Source.fromURL(u).getLines()
+        .collect { case l if l.startsWith("# TYPE ") => l.split(' ')(2) }.toSet
       val view = Scraper.metadataView(spark, meta).collect()
-      assert(view.length == 1)
-      assert((view.head.getString(0), view.head.getString(1), view.head.getString(2)) ==
-        ("graft_http_requests_total", "counter", "Requests served per endpoint."))
+      assert(view.map(_.getString(0)).toSet == declared && view.length == declared.size)
+      assert(view.map(r => (r.getString(0), r.getString(1), r.getString(2)))
+        .contains(("graft_http_requests_total", "counter", "Requests served per endpoint.")))
 
       // a server wired to the harvested store serves the upstream shape
       val serving = new RemoteReadServer(mkQuerier,
@@ -483,11 +524,12 @@ class RemoteReadServerSpec extends AnyFunSuite {
           HttpRequest.newBuilder(new URI(
             s"http://127.0.0.1:$p2/api/v1/metadata$q")).GET().build(),
           HttpResponse.BodyHandlers.ofString())
-        assert(get("").body() ==
+        assert(get("").body().contains(""""graft_http_requests_total":""" +
+          """[{"type":"counter","help":"Requests served per endpoint.","unit":""}]"""))
+        // exact-metric filter; a miss is an empty data object
+        assert(get("?metric=graft_http_requests_total").body() ==
           """{"status":"success","data":{"graft_http_requests_total":""" +
           """[{"type":"counter","help":"Requests served per endpoint.","unit":""}]}}""")
-        // exact-metric filter; a miss is an empty data object
-        assert(get("?metric=graft_http_requests_total").body().contains("counter"))
         assert(get("?metric=nope").body() == """{"status":"success","data":{}}""")
       } finally serving.stop()
       // a server with no metadata source answers empty, not 404
