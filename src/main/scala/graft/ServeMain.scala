@@ -35,15 +35,20 @@ import org.apache.hadoop.conf.Configuration
 object ServeMain {
 
   /** Non-hidden children of `dir` that look like TSDB blocks
-    * (`<name>/meta.json` present). */
-  def blockUlids(dir: String, conf: Configuration = null): Seq[String] =
+    * (`<name>/meta.json` present), from one listing of `dir`. Names in
+    * `known` are blocks already seen: a block's `meta.json` is written
+    * last and never removed while the block dir exists, so only the
+    * other names are checked for one. */
+  def blockUlids(dir: String, conf: Configuration = null,
+                 known: Set[String] = Set.empty): Seq[String] =
     BlockIO.listNames(dir, conf)
-      .filter(n => BlockIO.exists(BlockIO.child(BlockIO.child(dir, n), "meta.json"), conf))
-      .sorted
+      .filter(n => known(n) || BlockIO.exists(BlockIO.child(BlockIO.child(dir, n), "meta.json"), conf))
 
   /** The store view over a native block dir, rebuilt when the ULID set
-    * changes. Each rebuild reads the blocks' metas once into a
-    * driver-local [[BlockSelect]], which answers remote-read
+    * changes; each request lists the dir once to see whether it did.
+    * Each rebuild reads the blocks' metas and tombstones and resolves
+    * their file paths once, into a driver-local [[BlockSelect]], which
+    * answers remote-read
     * (`TsQuerier.streamSelect`) from the index and chunks with no Spark
     * job, and re-plans the DSv2 relation into a canonical view cached
     * lazily for PromQL and the `/api/v1` endpoints (filled by the first
@@ -57,7 +62,7 @@ object ServeMain {
     private var view: org.apache.spark.sql.DataFrame = null
     private var local: BlockSelect = null
     def querier(): TsQuerier = synchronized {
-      val ulids = blockUlids(dir, conf)
+      val ulids = blockUlids(dir, conf, if (key == null) Set.empty else key.toSet)
       if (ulids != key) {
         if (view != null) view.unpersist(false)
         // the DSv2 source infers the schema through the active session

@@ -1,10 +1,10 @@
 package graft.remote
 
-import java.io.ByteArrayOutputStream
 import java.net.InetSocketAddress
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.xerial.snappy.Snappy
 import graft.tsdb.{ChunkFile, LabelMatcher, MatchType, Sample, SampleStream, TsQuerier}
+import graft.tsdb.datasource.TsdbIndexCache
 
 /** Prometheus remote-read protocol front-end — the reference's only query
   * entry point (`server.go:51,64-97`; SURVEY.md §2.1 S10, §3.1).
@@ -22,32 +22,48 @@ import graft.tsdb.{ChunkFile, LabelMatcher, MatchType, Sample, SampleStream, TsQ
   */
 object Proto {
   // ---- minimal proto3 wire primitives ----
-  final class W {
-    val out = new ByteArrayOutputStream()
+  /** Protobuf writer over a growable byte array (not thread-safe: one
+    * per message being built). */
+  final class W(initialBytes: Int = 64) {
+    private var buf = new Array[Byte](math.max(initialBytes, 16))
+    private var n = 0
+    private def ensure(more: Int): Unit =
+      if (n + more > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, n + more))
+    private def put(b: Array[Byte], off: Int, len: Int): Unit = {
+      ensure(len); System.arraycopy(b, off, buf, n, len); n += len
+    }
     def varint(v0: Long): Unit = {
+      ensure(10)
       var v = v0
-      while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      out.write(v.toInt)
+      while ((v & ~0x7fL) != 0) { buf(n) = ((v & 0x7f) | 0x80).toByte; n += 1; v >>>= 7 }
+      buf(n) = v.toByte; n += 1
+    }
+    /** Eight bytes, little-endian. */
+    def fixed64(bits: Long): Unit = {
+      ensure(8)
+      var i = 0
+      while (i < 8) { buf(n) = (bits >>> (8 * i)).toByte; n += 1; i += 1 }
     }
     def tag(field: Int, wire: Int): Unit = varint((field << 3) | wire)
-    def str(field: Int, s: String): Unit = {
-      val b = s.getBytes("UTF-8"); tag(field, 2); varint(b.length); out.write(b, 0, b.length)
-    }
+    def str(field: Int, s: String): Unit = raw(field, s.getBytes("UTF-8"))
     def i64(field: Int, v: Long): Unit = { tag(field, 0); varint(v) }
     def dbl(field: Int, v: Double): Unit = {
-      tag(field, 1)
-      val bits = java.lang.Double.doubleToLongBits(v)
-      (0 until 8).foreach(i => out.write(((bits >>> (8 * i)) & 0xff).toInt)) // little-endian
+      tag(field, 1); fixed64(java.lang.Double.doubleToLongBits(v))
     }
     def raw(field: Int, b: Array[Byte]): Unit = {
-      tag(field, 2); varint(b.length); out.write(b, 0, b.length)
+      tag(field, 2); varint(b.length); put(b, 0, b.length)
     }
     def msg(field: Int, body: W): Unit = {
-      val b = body.out.toByteArray; tag(field, 2); varint(b.length); out.write(b, 0, b.length)
+      tag(field, 2); varint(body.n); put(body.buf, 0, body.n)
     }
-    def bytes: Array[Byte] = out.toByteArray
-    def size: Int = out.size()
+    def bytes: Array[Byte] = java.util.Arrays.copyOf(buf, n)
+    def size: Int = n
   }
+
+  /** Bytes of `v` as a varint. */
+  def varintSize(v: Long): Int =
+    if (v < 0) 10 else (64 - java.lang.Long.numberOfLeadingZeros(v | 1) + 6) / 7
 
   final class R(buf: Array[Byte], var pos: Int, val end: Int) {
     def this(buf: Array[Byte]) = this(buf, 0, buf.length)
@@ -60,7 +76,8 @@ object Proto {
     def tag(): (Int, Int) = { val t = varint(); ((t >>> 3).toInt, (t & 7).toInt) }
     def dbl(): Double = {
       var bits = 0L
-      (0 until 8).foreach(i => { bits |= (buf(pos) & 0xffL) << (8 * i); pos += 1 })
+      var i = 0
+      while (i < 8) { bits |= (buf(pos) & 0xffL) << (8 * i); pos += 1; i += 1 }
       java.lang.Double.longBitsToDouble(bits)
     }
     def sub(): R = { val len = varint().toInt; val r = new R(buf, pos, pos + len); pos += len; r }
@@ -161,18 +178,33 @@ object Proto {
       case (_, wire) => r.skip(wire)
     }
 
-  /** One `TimeSeries` message (shared by QueryResult and WriteRequest —
-    * remote.proto uses the same layout in both). */
-  def encodeTimeSeries(ss: SampleStream): W = {
-    val tw = new W
-    ss.labels.toSeq.sortBy(_._1).foreach { case (n, v) =>
-      val lw = new W; lw.str(1, n); lw.str(2, v); tw.msg(1, lw)
+  /** The series' labels by name, each a `Label{name = 1, value = 2}`
+    * message in field 1 of `w`. */
+  private def labels(w: W, ss: SampleStream): Unit =
+    ss.labels.toSeq.sortBy(_._1).foreach { case (name, value) =>
+      val nb = name.getBytes("UTF-8")
+      val vb = value.getBytes("UTF-8")
+      w.tag(1, 2)
+      w.varint(2 + varintSize(nb.length) + nb.length + varintSize(vb.length) + vb.length)
+      w.raw(1, nb); w.raw(2, vb)
     }
-    ss.samples.foreach { s =>
-      val sw = new W
-      if (s.v != 0.0 || java.lang.Double.doubleToLongBits(s.v) != 0L) sw.dbl(1, s.v)
-      sw.i64(2, s.t)
-      tw.msg(2, sw)
+
+  /** One `TimeSeries` message (shared by QueryResult and WriteRequest —
+    * remote.proto uses the same layout in both). Each
+    * `Sample{value = 1, timestamp = 2}` is written in place, its length
+    * known up front; a zero value (+0.0 only) is omitted, as proto3
+    * omits defaults. */
+  def encodeTimeSeries(ss: SampleStream): W = {
+    val tw = new W(64 + 16 * ss.samples.size)
+    labels(tw, ss)
+    val it = ss.samples.iterator
+    while (it.hasNext) {
+      val s = it.next()
+      val bits = java.lang.Double.doubleToLongBits(s.v)
+      tw.tag(2, 2)
+      tw.varint((if (bits != 0L) 9 else 0) + 1 + varintSize(s.t))
+      if (bits != 0L) { tw.tag(1, 1); tw.fixed64(bits) }
+      tw.i64(2, s.t)
     }
     tw
   }
@@ -206,19 +238,21 @@ object Proto {
   // XOR chunks are already compressed), so neither side ever holds more
   // than one frame of the response in memory.
 
-  /** One ChunkedSeries message: labels + XOR-encoded sample groups. */
+  /** One ChunkedSeries message: labels + XOR-encoded sample groups,
+    * each `Chunk` written in place with its length known up front. */
   def encodeChunkedSeries(ss: SampleStream,
                           maxSamplesPerChunk: Int = 120): W = {
-    val sw = new W
-    ss.labels.toSeq.sortBy(_._1).foreach { case (n, v) =>
-      val lw = new W; lw.str(1, n); lw.str(2, v); sw.msg(1, lw)
-    }
+    val sw = new W(64 + 2 * ss.samples.size)
+    labels(sw, ss)
     ss.samples.grouped(maxSamplesPerChunk).foreach { grp =>
-      val cw = new W
-      cw.i64(1, grp.head.t); cw.i64(2, grp.last.t)
-      cw.i64(3, 1) // Encoding.XOR
-      cw.raw(4, graft.tsdb.XorChunk.encode(grp))
-      sw.msg(2, cw)
+      val (mint, maxt) = (grp.head.t, grp.last.t)
+      val data = graft.tsdb.XorChunk.encode(grp)
+      sw.tag(2, 2)
+      sw.varint(1 + varintSize(mint) + 1 + varintSize(maxt) + 2 +
+        1 + varintSize(data.length) + data.length)
+      sw.i64(1, mint); sw.i64(2, maxt)
+      sw.i64(3, 1) // Encoding.XOR
+      sw.raw(4, data)
     }
     sw
   }
@@ -227,15 +261,10 @@ object Proto {
   def frame(body: Array[Byte]): Array[Byte] = {
     val crc = new java.util.zip.CRC32C
     crc.update(body)
-    val head = new W
+    val head = new W(16)
     head.varint(body.length)
-    val out = new java.io.ByteArrayOutputStream
-    out.write(head.bytes)
-    val c = crc.getValue.toInt
-    out.write((c >>> 24) & 0xff); out.write((c >>> 16) & 0xff)
-    out.write((c >>> 8) & 0xff); out.write(c & 0xff)
-    out.write(body, 0, body.length)
-    out.toByteArray
+    java.nio.ByteBuffer.allocate(head.size + 4 + body.length)
+      .put(head.bytes).putInt(crc.getValue.toInt).put(body).array()
   }
 
   /** Stream a query's series as framed ChunkedReadResponse messages to
@@ -468,7 +497,15 @@ final class RemoteReadServer(querier: => TsQuerier, port: Int = 0, threads: Int 
       family("graft_chunk_cache_bytes", "gauge", "Bytes held by the chunk record cache.",
         Seq("" -> ChunkFile.RecordCache.currentBytes)) ++
       family("graft_chunk_bytes_fetched_total", "counter", "Chunk segment bytes read from storage.",
-        Seq("" -> ChunkFile.bytesFetched.get))
+        Seq("" -> ChunkFile.bytesFetched.get)) ++
+      family("graft_index_cache_hits_total", "counter", "Parsed block index cache hits in this JVM.",
+        Seq("" -> TsdbIndexCache.hits)) ++
+      family("graft_index_cache_misses_total", "counter", "Parsed block index cache misses in this JVM.",
+        Seq("" -> TsdbIndexCache.misses)) ++
+      family("graft_index_cache_evictions_total", "counter", "Parsed block index cache evictions in this JVM.",
+        Seq("" -> TsdbIndexCache.evictions)) ++
+      family("graft_index_cache_entries", "gauge", "Parsed block indexes held by the cache.",
+        Seq("" -> TsdbIndexCache.entryCount.toLong))
     val body = (lines.mkString("\n") + "\n").getBytes("UTF-8")
     ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4")
     ex.sendResponseHeaders(200, body.length)

@@ -218,6 +218,17 @@ object ChunkFile {
     }
   }
 
+  /** A segment file's path and its qualified form, which keys its
+    * records in the [[RecordCache]]. */
+  final case class Segment(path: String, key: String)
+
+  /** Segment `fileSeq` under `chunksDir` (`%06d`-named). */
+  def segment(chunksDir: String, fileSeq: Int,
+              conf: org.apache.hadoop.conf.Configuration = null): Segment = {
+    val path = BlockIO.child(chunksDir, f"$fileSeq%06d")
+    Segment(path, BlockIO.qualified(path, conf))
+  }
+
   /** Read `refs` (fileSeq << 32 | offset) across segment files with one
     * [[SegmentRangeReader]] per touched segment; records already in the
     * [[RecordCache]] are served without touching the file. `chunksDir`
@@ -225,9 +236,13 @@ object ChunkFile {
   def readRefs(chunksDir: String, refs: Seq[Long],
                stats: ReadStats = null,
                conf: org.apache.hadoop.conf.Configuration = null): Map[Long, ChunkRecord] =
+    readFrom(refs, segment(chunksDir, _, conf), stats, conf)
+
+  /** [[readRefs]] with each touched segment resolved by `segmentOf`. */
+  def readFrom(refs: Seq[Long], segmentOf: Int => Segment, stats: ReadStats,
+               conf: org.apache.hadoop.conf.Configuration): Map[Long, ChunkRecord] =
     refs.groupBy(refFileSeq).iterator.flatMap { case (seq, rs) =>
-      val path = BlockIO.child(chunksDir, f"$seq%06d")
-      val key = BlockIO.qualified(path, conf)
+      val Segment(path, key) = segmentOf(seq)
       val offs = rs.map(refOffset).distinct
       val cached = offs.flatMap(o => RecordCache.get(key, o).map(o -> _)).toMap
       val missing = offs.filterNot(cached.contains)

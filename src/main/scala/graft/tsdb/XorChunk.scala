@@ -1,27 +1,32 @@
 package graft.tsdb
 
-import scala.collection.mutable.ArrayBuffer
-
 /** MSB-first bit stream, the substrate of the XOR chunk encoding.
   * Same wire behavior as the reference's bstream
   * (`vendor/github.com/prometheus/tsdb/chunks/bstream.go`): bits fill each
   * byte from the most-significant end. Clean-room implementation from the
-  * format (Gorilla paper §4.1; Prometheus TSDB chunk format docs). */
-final class BitWriter {
-  private val buf = ArrayBuffer[Byte]()
-  private var bitPos = 8 // bits free in current byte; 8 == no open byte
+  * format (Gorilla paper §4.1; Prometheus TSDB chunk format docs).
+  *
+  * A write moves up to a byte per step into a growable array; the
+  * trailing byte is zero-padded. */
+final class BitWriter(initialBytes: Int = 16) {
+  private var buf = new Array[Byte](math.max(initialBytes, 1))
+  private var nbits = 0 // bits written so far
 
-  def writeBit(b: Boolean): Unit = {
-    if (bitPos == 8) { buf += 0; bitPos = 0 }
-    if (b) buf(buf.length - 1) = (buf(buf.length - 1) | (0x80 >>> bitPos)).toByte
-    bitPos += 1
-    if (bitPos == 8) bitPos = 8
-  }
+  def writeBit(b: Boolean): Unit = writeBits(if (b) 1L else 0L, 1)
 
   /** Write the low `n` bits of `v`, MSB first. */
   def writeBits(v: Long, n: Int): Unit = {
-    var i = n - 1
-    while (i >= 0) { writeBit(((v >>> i) & 1L) == 1L); i -= 1 }
+    var left = n
+    while (left > 0) {
+      val used = nbits & 7
+      val at = nbits >>> 3
+      if (used == 0 && at == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+      val take = math.min(8 - used, left)
+      left -= take
+      val bits = ((v >>> left) & ((1L << take) - 1)).toInt
+      buf(at) = (buf(at) | (bits << (8 - used - take))).toByte
+      nbits += take
+    }
   }
 
   def writeByte(b: Int): Unit = writeBits(b.toLong & 0xffL, 8)
@@ -40,14 +45,14 @@ final class BitWriter {
   def writeVarint(v: Long): Unit =
     writeUvarint((v << 1) ^ (v >> 63))
 
-  def toBytes: Array[Byte] = buf.toArray
-  /** Overwrite a previously written byte (for the sample-count header). */
-  def setByte(idx: Int, b: Int): Unit = buf(idx) = b.toByte
+  def toBytes: Array[Byte] = java.util.Arrays.copyOf(buf, (nbits + 7) >>> 3)
 }
 
+/** Reads what [[BitWriter]] writes, up to a byte per step. Reading past
+  * the end throws `ArrayIndexOutOfBoundsException`. */
 final class BitReader(bytes: Array[Byte]) {
   private var idx = 0
-  private var bit = 0
+  private var bit = 0 // bits of bytes(idx) already read
 
   def readBit(): Boolean = {
     val b = ((bytes(idx) >>> (7 - bit)) & 1) == 1
@@ -58,8 +63,18 @@ final class BitReader(bytes: Array[Byte]) {
 
   def readBits(n: Int): Long = {
     var v = 0L
-    var i = 0
-    while (i < n) { v = (v << 1) | (if (readBit()) 1L else 0L); i += 1 }
+    var left = n
+    while (left > 0) {
+      val avail = 8 - bit
+      val b = bytes(idx) & ((1 << avail) - 1)
+      if (left >= avail) {
+        v = (v << avail) | b
+        left -= avail; bit = 0; idx += 1
+      } else {
+        v = (v << left) | (b >>> (avail - left))
+        bit += left; left = 0
+      }
+    }
     v
   }
 
@@ -97,58 +112,56 @@ object XorChunk {
   val Encoding: Int = 1 // chunk encoding byte for XOR (chunks.go framing)
 
   def encode(samples: Seq[Sample]): Array[Byte] = {
-    require(samples.size <= 0xffff, "chunk overflow")
-    val w = new BitWriter
-    w.writeByte(samples.size >>> 8); w.writeByte(samples.size & 0xff)
+    val num = samples.size
+    require(num <= 0xffff, "chunk overflow")
+    val w = new BitWriter(16 + 2 * num)
+    w.writeBits(num.toLong, 16)
     var prevT = 0L; var prevDelta = 0L; var prevV = 0L
     var leading = -1; var trailing = 0 // -1 == no window yet (ref sentinel 0xff)
     var i = 0
-    samples.foreach { s =>
+    val it = samples.iterator
+    while (it.hasNext) {
+      val s = it.next()
+      val bits = java.lang.Double.doubleToLongBits(s.v)
       if (i == 0) {
         w.writeVarint(s.t)
-        prevV = java.lang.Double.doubleToLongBits(s.v)
-        w.writeBits(prevV, 64)
-      } else if (i == 1) {
-        prevDelta = s.t - prevT
-        w.writeUvarint(prevDelta)
-        writeXorValue(w, s.v)
+        w.writeBits(bits, 64)
       } else {
-        val delta = s.t - prevT
-        val dod = delta - prevDelta
-        prevDelta = delta
-        if (dod == 0) w.writeBit(false)
-        else if (bitRange(dod, 14)) { w.writeBits(0x2, 2); w.writeBits(dod, 14) }
-        else if (bitRange(dod, 17)) { w.writeBits(0x6, 3); w.writeBits(dod, 17) }
-        else if (bitRange(dod, 20)) { w.writeBits(0xe, 4); w.writeBits(dod, 20) }
-        else { w.writeBits(0xf, 4); w.writeBits(dod, 64) }
-        writeXorValue(w, s.v)
-      }
-      prevT = s.t
-      i += 1
-
-      def writeXorValue(w: BitWriter, v: Double): Unit = {
-        val bits = java.lang.Double.doubleToLongBits(v)
+        if (i == 1) {
+          prevDelta = s.t - prevT
+          w.writeUvarint(prevDelta)
+        } else {
+          val delta = s.t - prevT
+          val dod = delta - prevDelta
+          prevDelta = delta
+          // prefix and field in one write: '10'+14b, '110'+17b, '1110'+20b
+          if (dod == 0) w.writeBit(false)
+          else if (bitRange(dod, 14)) w.writeBits((0x2L << 14) | (dod & 0x3fffL), 16)
+          else if (bitRange(dod, 17)) w.writeBits((0x6L << 17) | (dod & 0x1ffffL), 20)
+          else if (bitRange(dod, 20)) w.writeBits((0xeL << 20) | (dod & 0xfffffL), 24)
+          else { w.writeBits(0xfL, 4); w.writeBits(dod, 64) }
+        }
         val xor = bits ^ prevV
-        prevV = bits
         if (xor == 0) w.writeBit(false)
         else {
-          w.writeBit(true)
           var lead = java.lang.Long.numberOfLeadingZeros(xor)
           val trail = java.lang.Long.numberOfTrailingZeros(xor)
           if (lead > 31) lead = 31 // 5-bit field cap (xor.go:191)
           if (leading != -1 && lead >= leading && trail >= trailing) {
-            w.writeBit(false)
+            w.writeBits(0x2L, 2) // '1','0': reuse the window
             w.writeBits(xor >>> trailing, 64 - leading - trailing)
           } else {
             leading = lead; trailing = trail
-            w.writeBit(true)
-            w.writeBits(lead.toLong, 5)
             val sigbits = 64 - lead - trail
-            w.writeBits(sigbits.toLong & 0x3f, 6) // 64 encoded as 0
+            // '1','1' | 5b leading | 6b sigbits (64 encoded as 0)
+            w.writeBits((0x3L << 11) | (lead.toLong << 6) | (sigbits & 0x3f), 13)
             w.writeBits(xor >>> trail, sigbits)
           }
         }
       }
+      prevT = s.t
+      prevV = bits
+      i += 1
     }
     w.toBytes
   }
@@ -160,8 +173,8 @@ object XorChunk {
 
   def decode(bytes: Array[Byte]): IndexedSeq[Sample] = {
     val r = new BitReader(bytes)
-    val num = ((r.readByte() & 0xff) << 8) | (r.readByte() & 0xff)
-    val out = new ArrayBuffer[Sample](num)
+    val num = r.readBits(16).toInt
+    val out = new Array[Sample](num)
     var t = 0L; var delta = 0L; var vBits = 0L
     var leading = 0; var trailing = 0
     var i = 0
@@ -169,29 +182,20 @@ object XorChunk {
       if (i == 0) {
         t = r.readVarint()
         vBits = r.readBits(64)
-      } else if (i == 1) {
-        delta = r.readUvarint()
-        t += delta
-        readXorValue()
       } else {
-        var prefix = 0
-        var d = 0
-        while (d < 4 && r.readBit()) { prefix += 1; d += 1 }
-        val dod = prefix match {
-          case 0 => 0L
-          case 1 => signExtend(r.readBits(14), 14)
-          case 2 => signExtend(r.readBits(17), 17)
-          case 3 => signExtend(r.readBits(20), 20)
-          case 4 => r.readBits(64)
+        if (i == 1) delta = r.readUvarint()
+        else {
+          var prefix = 0
+          while (prefix < 4 && r.readBit()) prefix += 1
+          delta += (prefix match {
+            case 0 => 0L
+            case 1 => signExtend(r.readBits(14), 14)
+            case 2 => signExtend(r.readBits(17), 17)
+            case 3 => signExtend(r.readBits(20), 20)
+            case _ => r.readBits(64)
+          })
         }
-        delta += dod
         t += delta
-        readXorValue()
-      }
-      out += Sample(t, java.lang.Double.longBitsToDouble(vBits))
-      i += 1
-
-      def readXorValue(): Unit = {
         if (r.readBit()) {
           if (r.readBit()) {
             leading = r.readBits(5).toInt
@@ -199,12 +203,13 @@ object XorChunk {
             if (sig == 0) sig = 64 // 0 means 64 (xor.go decode)
             trailing = 64 - leading - sig
           }
-          val sig = 64 - leading - trailing
-          vBits ^= r.readBits(sig) << trailing
+          vBits ^= r.readBits(64 - leading - trailing) << trailing
         }
       }
+      out(i) = Sample(t, java.lang.Double.longBitsToDouble(vBits))
+      i += 1
     }
-    out.toIndexedSeq
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
   }
 
   /** Reference decode uses strict `>`: 2^(n-1) stays positive

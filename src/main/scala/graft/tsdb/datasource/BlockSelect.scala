@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.tsdb.{BlockIO, Label, LabelMatcher, Sample, SampleStream, Tombstones, TsSchema, TsdbBlock, TsdbIndex, XorChunk}
+import graft.tsdb.{Label, LabelMatcher, Sample, SampleStream, Tombstones, TsSchema, TsdbBlock, TsdbIndex, XorChunk}
 
 /** Driver-local select over a fixed set of native blocks — agni's own
   * remote-read path (`server.go:64-97`, `querier.go:499-574`) with no
@@ -32,10 +32,16 @@ import graft.tsdb.{BlockIO, Label, LabelMatcher, Sample, SampleStream, Tombstone
   * series; each series is decoded only when the iterator reaches it,
   * so memory follows the response, not the store.
   *
-  * @param blocks block dirs and their metas, read once by the caller
-  * @param conf   the Hadoop conf every read resolves paths with
+  * Everything about a block that does not depend on the request is
+  * resolved once per view, in [[BlockSelect.open]], not per select: its
+  * meta, its index path and qualified cache key, its tombstones, its
+  * chunks dir, and each segment's path and key on first use
+  * ([[BlockFiles]]). Blocks are immutable, so this holds for the life of
+  * the view; a new or removed block makes a new view.
+  *
+  * @param blocks each block's meta and resolved files
   */
-final class BlockSelect(blocks: Seq[(String, TsdbBlock.BlockMeta)], conf: Configuration) {
+final class BlockSelect private (blocks: Seq[(TsdbBlock.BlockMeta, BlockFiles)]) {
   import BlockSelect._
 
   /** Series with samples in the inclusive range [mint, maxt] matching
@@ -63,15 +69,15 @@ final class BlockSelect(blocks: Seq[(String, TsdbBlock.BlockMeta)], conf: Config
         val bs = t - Math.floorMod(t, TsSchema.BlockMs); bs >= lo && bs <= maxt
       }
     val series = mutable.HashMap.empty[Seq[Label], mutable.ArrayBuffer[() => Iterator[Sample]]]
-    for ((dir, meta) <- blocks if meta.minTime <= maxt && mint <= meta.maxTime) { // P10
-      val idx = TsdbIndexCache.get(BlockIO.child(dir, "index"), null, conf)
+    for ((meta, files) <- blocks if meta.minTime <= maxt && mint <= meta.maxTime) { // P10
+      val idx = files.index()
       val labelsOf = postings(idx, byPostings).iterator.flatMap { ref =>
         val ls = canonical(idx.series(ref).labels)
         val values = ls.iterator.map(l => l.name -> l.value).toMap
         if (byLabels.forall { case (n, f) => f(values.getOrElse(n, "")) }) Some(ref -> ls) else None
       }.toMap
       val (_, plan, chunks) = TsdbSeriesPlan.build(
-        TsdbInputPartition(dir, labelsOf.keys.toArray.sorted, mint, maxt, Nil), conf = conf)
+        TsdbInputPartition(files.dir, labelsOf.keys.toArray.sorted, mint, maxt, Nil), files, null)
       for ((ref, chunkRefs, ivs) <- plan)
         series.getOrElseUpdate(labelsOf(ref), mutable.ArrayBuffer.empty) += (() =>
           chunkRefs.iterator.flatMap(c => XorChunk.decode(chunks(c).data))
@@ -91,9 +97,9 @@ final class BlockSelect(blocks: Seq[(String, TsdbBlock.BlockMeta)], conf: Config
 
 object BlockSelect {
   /** A select over the blocks under `dirs`, reading each `meta.json`
-    * once. */
+    * and tombstones file and resolving each path once. */
   def open(dirs: Seq[String], conf: Configuration): BlockSelect =
-    new BlockSelect(dirs.map(d => d -> TsdbBlock.readMeta(d, conf)), conf)
+    new BlockSelect(dirs.map(d => TsdbBlock.readMeta(d, conf) -> new BlockFiles(d, conf)))
 
   /** Postings refs of the series carrying a value every matcher accepts
     * (P6/P7 value enumeration, P8 intersection); all series when there

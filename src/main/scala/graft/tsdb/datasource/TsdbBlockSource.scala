@@ -469,27 +469,51 @@ final case class TsdbReaderFactory(
     new TsdbColumnarReader(partition.asInstanceOf[TsdbInputPartition], conf.value.value)
 }
 
+/** A block dir's files with their paths and per-JVM cache keys
+  * qualified once: the index, the tombstones (read here) and the chunk
+  * segments (each resolved on first use). Blocks are immutable — the
+  * only tombstones writer is `TsdbBlock.write` — so one instance serves
+  * every read of its block. */
+private[datasource] final class BlockFiles(val dir: String,
+                                           conf: org.apache.hadoop.conf.Configuration) {
+  private val indexPath = BlockIO.child(dir, "index")
+  private val indexKey = BlockIO.qualified(indexPath, conf)
+  val stones: graft.tsdb.Tombstones.Stones = graft.tsdb.Tombstones.read(dir, conf)
+  private val chunksDir = BlockIO.child(dir, "chunks")
+  private val segments = new java.util.concurrent.ConcurrentHashMap[Int, ChunkFile.Segment]()
+
+  def index(stats: ChunkFile.ReadStats = null): TsdbIndex.IndexReader =
+    TsdbIndexCache.getKeyed(indexKey, indexPath, stats, conf)
+
+  /** [[ChunkFile.readRefs]] over this block's segments. */
+  def readChunks(refs: Seq[Long], stats: ChunkFile.ReadStats = null): Map[Long, ChunkFile.ChunkRecord] =
+    ChunkFile.readFrom(refs,
+      seq => segments.computeIfAbsent(seq, s => ChunkFile.segment(chunksDir, s, conf)), stats, conf)
+}
+
 /** Shared per-partition planning: chunk pruning (P11/P13) + one
   * coalesced fetch of every chunk the partition will decode. */
 private[datasource] object TsdbSeriesPlan {
   type Plan = Array[(Long, Seq[Long], Seq[(Long, Long)])]
   def build(p: TsdbInputPartition, stats: ChunkFile.ReadStats = null,
             conf: org.apache.hadoop.conf.Configuration = null)
+      : (TsdbIndex.IndexReader, Plan, Map[Long, ChunkFile.ChunkRecord]) =
+    build(p, new BlockFiles(p.blockDir, conf), stats)
+
+  /** The plan over `files`, the resolved files of `p.blockDir`. */
+  def build(p: TsdbInputPartition, files: BlockFiles, stats: ChunkFile.ReadStats)
       : (TsdbIndex.IndexReader, Plan, Map[Long, ChunkFile.ChunkRecord]) = {
-    val idx = TsdbIndexCache.get(BlockIO.child(p.blockDir, "index"), stats, conf)
-    val stones = graft.tsdb.Tombstones.read(p.blockDir, conf)
+    val idx = files.index(stats)
     val plan: Plan = p.refs.flatMap { ref =>
       val s = idx.series(ref)
-      val ivs = stones.getOrElse(ref, Seq.empty)
+      val ivs = files.stones.getOrElse(ref, Seq.empty)
       val chunks = s.chunks
         .filter(c => c.minTime <= p.maxt && p.mint <= c.maxTime) // P11
         // P13: drop chunks wholly inside a deleted interval
         .filterNot(c => ivs.exists { case (lo, hi) => c.minTime >= lo && c.maxTime <= hi })
       if (chunks.isEmpty) None else Some((ref, chunks.map(_.ref), ivs))
     }
-    val chunkData = ChunkFile.readRefs(
-      BlockIO.child(p.blockDir, "chunks"), plan.flatMap(_._2).toSeq, stats, conf)
-    (idx, plan, chunkData)
+    (idx, plan, files.readChunks(plan.flatMap(_._2).toSeq, stats))
   }
 }
 
@@ -581,31 +605,48 @@ class TsdbColumnarReader(p: TsdbInputPartition,
 /** Per-JVM parsed-index cache. Blocks are immutable (ULID-named dirs,
   * SURVEY.md §1.2), so caching by path is safe; bounded at a few entries
   * (an executor reads a handful of blocks concurrently). Shared by the
-  * driver's planner and every reader task in the same JVM. */
+  * driver's planner and every reader task in the same JVM. Lifetime
+  * hit, miss and eviction counts are exported on `/metrics`. */
 object TsdbIndexCache {
   private val MaxEntries = 8
+  private val hitCount = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val missCount = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val evictionCount = new java.util.concurrent.atomic.AtomicLong(0L)
   private val cache =
     new java.util.LinkedHashMap[String, TsdbIndex.IndexReader](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, TsdbIndex.IndexReader]): Boolean =
-        size() > MaxEntries
+          e: java.util.Map.Entry[String, TsdbIndex.IndexReader]): Boolean = {
+        val evict = size() > MaxEntries
+        if (evict) evictionCount.incrementAndGet()
+        evict
+      }
     }
+  def hits: Long = hitCount.get()
+  def misses: Long = missCount.get()
+  def evictions: Long = evictionCount.get()
+  def entryCount: Int = cache.synchronized { cache.size }
+
   def get(path: String, stats: ChunkFile.ReadStats = null,
-          conf: org.apache.hadoop.conf.Configuration = null): TsdbIndex.IndexReader = {
-    val key = BlockIO.qualified(path, conf)
+          conf: org.apache.hadoop.conf.Configuration = null): TsdbIndex.IndexReader =
+    getKeyed(BlockIO.qualified(path, conf), path, stats, conf)
+
+  /** The index at `path`, whose qualified form is `key`. */
+  def getKeyed(key: String, path: String, stats: ChunkFile.ReadStats,
+               conf: org.apache.hadoop.conf.Configuration): TsdbIndex.IndexReader =
     cache.synchronized {
       val hit = cache.get(key)
       if (hit != null) {
+        hitCount.incrementAndGet()
         if (stats != null) stats.indexCacheHits += 1
         hit
       } else {
+        missCount.incrementAndGet()
         if (stats != null) stats.indexCacheMisses += 1
         val r = new TsdbIndex.IndexReader(BlockIO.readAllBytes(path, conf))
         cache.put(key, r)
         r
       }
     }
-  }
 }
 
 /** Runtime IO counters for the `graft-tsdb` scan — the Spark-native slot

@@ -35,6 +35,143 @@ class ProtoSpec extends AnyFunSuite {
       Proto.encodeReadRequest(Seq(Proto.Query(0, 1, Seq(LabelMatcher.prefix("a", "b")))))
     }
   }
+
+  test("golden bytes: both response encodings equal the nested-W encoder") {
+    val rnd = new scala.util.Random(11)
+    def series(i: Int, n: Int, t0: Long) = SampleStream(
+      Map("__name__" -> s"m${i % 7}", "job" -> "api", "instance" -> s"i-$i", "empty" -> "", "ü" -> "∆"),
+      (0 until n).map(k => Sample(t0 + k * 15000L,
+        if (k % 5 == 0) 0.0 else if (k % 5 == 1) -0.0 else rnd.nextGaussian())))
+    val edge = SampleStream(Map("__name__" -> "edge"), Seq(Sample(-1L, 0.0), Sample(-1L, -0.0),
+      Sample(Long.MinValue, Double.NaN), Sample(0L, Double.PositiveInfinity), Sample(Long.MaxValue, 1.0)))
+    val small = Seq(edge, series(1, 3, -30000L), SampleStream(Map("job" -> "none"), Seq.empty))
+    // more than 1 MiB of chunked payload: crosses the frame flush
+    val big = (0 until 800).map(i => series(i, 480, 1700000000000L + i))
+    for (results <- Seq(Seq(small), Seq(small, Seq.empty, big.take(40)), Seq(big))) {
+      assert(Proto.encodeReadResponse(results).toSeq ==
+        NestedWProto.encodeReadResponseStreaming(results.map(_.iterator)).toSeq)
+      for ((q, i) <- results.zipWithIndex) {
+        def frames(write: (Iterator[SampleStream], Long, Array[Byte] => Unit) => Unit) = {
+          val out = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
+          write(q.iterator, i.toLong, out += _)
+          out.map(_.toSeq).toSeq
+        }
+        val got = frames(Proto.writeChunkedFrames(_, _, _))
+        assert(got == frames(NestedWProto.writeChunkedFrames(_, _, _)))
+        if (q eq big) assert(got.size > 1)
+      }
+    }
+    // the edge cases are on the wire as expected: +0.0 omitted, -0.0
+    // kept, a negative t a 10-byte varint
+    val back = Proto.decodeReadResponse(Proto.encodeReadResponse(Seq(Seq(edge)))).head.head.samples
+    assert(back.map(s => (s.t, java.lang.Double.doubleToRawLongBits(s.v))) ==
+      edge.samples.map(s => (s.t, java.lang.Double.doubleToLongBits(s.v))))
+    assert(Proto.varintSize(-1L) == 10 && Proto.varintSize(0L) == 1 && Proto.varintSize(128L) == 2)
+  }
+}
+
+/** The protobuf encoders as first written, one nested `W` over a
+  * `ByteArrayOutputStream` per message (unchanged but for the enclosing
+  * object): the reference the flat writer is checked against. */
+private object NestedWProto {
+  import java.io.ByteArrayOutputStream
+
+  final class W {
+    val out = new ByteArrayOutputStream()
+    def varint(v0: Long): Unit = {
+      var v = v0
+      while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
+      out.write(v.toInt)
+    }
+    def tag(field: Int, wire: Int): Unit = varint((field << 3) | wire)
+    def str(field: Int, s: String): Unit = {
+      val b = s.getBytes("UTF-8"); tag(field, 2); varint(b.length); out.write(b, 0, b.length)
+    }
+    def i64(field: Int, v: Long): Unit = { tag(field, 0); varint(v) }
+    def dbl(field: Int, v: Double): Unit = {
+      tag(field, 1)
+      val bits = java.lang.Double.doubleToLongBits(v)
+      (0 until 8).foreach(i => out.write(((bits >>> (8 * i)) & 0xff).toInt)) // little-endian
+    }
+    def raw(field: Int, b: Array[Byte]): Unit = {
+      tag(field, 2); varint(b.length); out.write(b, 0, b.length)
+    }
+    def msg(field: Int, body: W): Unit = {
+      val b = body.out.toByteArray; tag(field, 2); varint(b.length); out.write(b, 0, b.length)
+    }
+    def bytes: Array[Byte] = out.toByteArray
+    def size: Int = out.size()
+  }
+
+  def encodeTimeSeries(ss: SampleStream): W = {
+    val tw = new W
+    ss.labels.toSeq.sortBy(_._1).foreach { case (n, v) =>
+      val lw = new W; lw.str(1, n); lw.str(2, v); tw.msg(1, lw)
+    }
+    ss.samples.foreach { s =>
+      val sw = new W
+      if (s.v != 0.0 || java.lang.Double.doubleToLongBits(s.v) != 0L) sw.dbl(1, s.v)
+      sw.i64(2, s.t)
+      tw.msg(2, sw)
+    }
+    tw
+  }
+
+  def encodeReadResponseStreaming(results: Seq[Iterator[SampleStream]]): Array[Byte] = {
+    val w = new W
+    results.foreach { streams =>
+      val rw = new W
+      streams.foreach(ss => rw.msg(1, encodeTimeSeries(ss)))
+      w.msg(1, rw)
+    }
+    w.bytes
+  }
+
+  def encodeChunkedSeries(ss: SampleStream,
+                          maxSamplesPerChunk: Int = 120): W = {
+    val sw = new W
+    ss.labels.toSeq.sortBy(_._1).foreach { case (n, v) =>
+      val lw = new W; lw.str(1, n); lw.str(2, v); sw.msg(1, lw)
+    }
+    ss.samples.grouped(maxSamplesPerChunk).foreach { grp =>
+      val cw = new W
+      cw.i64(1, grp.head.t); cw.i64(2, grp.last.t)
+      cw.i64(3, 1) // Encoding.XOR
+      cw.raw(4, graft.tsdb.XorChunk.encode(grp))
+      sw.msg(2, cw)
+    }
+    sw
+  }
+
+  def frame(body: Array[Byte]): Array[Byte] = {
+    val crc = new java.util.zip.CRC32C
+    crc.update(body)
+    val head = new W
+    head.varint(body.length)
+    val out = new java.io.ByteArrayOutputStream
+    out.write(head.bytes)
+    val c = crc.getValue.toInt
+    out.write((c >>> 24) & 0xff); out.write((c >>> 16) & 0xff)
+    out.write((c >>> 8) & 0xff); out.write(c & 0xff)
+    out.write(body, 0, body.length)
+    out.toByteArray
+  }
+
+  def writeChunkedFrames(series: Iterator[SampleStream], queryIndex: Long,
+                         sink: Array[Byte] => Unit,
+                         frameBytes: Int = 1 << 20): Unit = {
+    var batch = new W
+    var n = 0
+    def flush(): Unit = if (n > 0) {
+      batch.i64(2, queryIndex)
+      sink(frame(batch.bytes)); batch = new W; n = 0
+    }
+    series.foreach { ss =>
+      batch.msg(1, encodeChunkedSeries(ss)); n += 1
+      if (batch.size >= frameBytes) flush()
+    }
+    flush()
+  }
 }
 
 class RemoteReadServerSpec extends AnyFunSuite {
@@ -468,6 +605,12 @@ class RemoteReadServerSpec extends AnyFunSuite {
       // two /federate hits above (one OK, one 400) both count
       assert(parsed("/federate") == 2.0 && parsed("/metrics") == 1.0,
         s"counters: $parsed")
+      // the parsed-index cache's lifetime counters and entries gauge
+      val byName = rows.collect { case (ls, v) if ls.size == 1 => ls("__name__") -> v }.toMap
+      for (f <- Seq("graft_index_cache_hits_total", "graft_index_cache_misses_total",
+                    "graft_index_cache_evictions_total", "graft_index_cache_entries"))
+        assert(byName.get(f).exists(_ >= 0.0), s"$f in $byName")
+      assert(byName("graft_index_cache_entries") <= 8.0)
     } finally server.stop()
   }
 

@@ -205,6 +205,12 @@ class BlockSelectSpec extends AnyFunSuite {
       assert(metrics.contains(s"""graft_remote_read_selects_total{path="native"} $selects"""), metrics)
       assert(!metrics.contains("""{path="spark"}"""), metrics)
       assert(metrics.contains("graft_chunk_cache_hits_total "), metrics)
+      // every native select looks up at least one block index
+      def value(family: String) = metrics.split("\n").collectFirst {
+        case l if l.startsWith(family + " ") => l.substring(family.length + 1).toDouble
+      }.getOrElse(fail(s"no $family in $metrics"))
+      assert(value("graft_index_cache_hits_total") + value("graft_index_cache_misses_total") >= selects)
+      assert(value("graft_index_cache_entries") >= 1 && value("graft_index_cache_entries") <= 8)
     } finally { native.stop(); fallback.stop() }
   }
 
@@ -254,5 +260,35 @@ class BlockSelectSpec extends AnyFunSuite {
       bits(q2.selectStreams(T0, T0 + 2 * W, ms).collect()))
     // the querier taken before the ship keeps its own block set
     assert(q1.streamSelect(T0, T0 + 2 * W, ms).map(_.samples.size).toSeq == Seq(120))
+  }
+
+  test("a block dir shows once its meta.json lands; a removed block is gone on the next querier") {
+    val dir = Files.createTempDirectory("graft-block-select-land")
+    TsdbBlock.write(dir.resolve("b1"), profile(T0, 0), TsdbBlock.syntheticUlid(21))
+    // b2 mid-upload: everything but its meta.json, which lands last
+    TsdbBlock.write(dir.resolve("b2"), profile(T0 + W, 0), TsdbBlock.syntheticUlid(22))
+    val meta = dir.resolve("b2").resolve("meta.json")
+    val held = Files.createTempDirectory("graft-held-meta").resolve("meta.json")
+    Files.move(meta, held)
+    val view = new ServeMain.BlocksView(spark, dir.toString)
+    val ms = Seq(eq("__name__", "node_cpu_seconds_total"), eq("instance", "i-1"), eq("mode", "idle"))
+    def sizes(q: TsQuerier) = q.streamSelect(T0, T0 + 2 * W, ms).map(_.samples.size).toSeq
+    assert(sizes(view.querier()) == Seq(120))
+    assert(sizes(view.querier()) == Seq(120), "b2 is looked at again on the next querier")
+    Files.move(held, meta)
+    val both = view.querier()
+    assert(sizes(both) == Seq(240))
+    assert(ServeMain.blockUlids(dir.toString) == Seq("b1", "b2"))
+    // a name the caller already knows as a block is listed, not stat-ed
+    Files.createDirectory(dir.resolve("b3"))
+    assert(ServeMain.blockUlids(dir.toString, known = Set("b3")) == Seq("b1", "b2", "b3"))
+    Files.delete(dir.resolve("b3"))
+    // remove b1: the next querier, and its Spark view, no longer see it
+    Files.walk(dir.resolve("b1")).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    val after = view.querier()
+    assert(sizes(after) == Seq(120))
+    assert(bits(after.streamSelect(T0, T0 + 2 * W, ms).toSeq) ==
+      bits(after.selectStreams(T0, T0 + 2 * W, ms).collect()))
+    assert(after.streamSelect(T0, T0 + 2 * W, ms).flatMap(_.samples).forall(_.t >= T0 + W))
   }
 }
