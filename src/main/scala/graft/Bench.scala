@@ -1,33 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // match Verify's session
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // plans here legitimately exceed 25 fields (wide pipeline schemas);
-      // raising the cap keeps the "Truncated the string representation"
-      // WARN from landing in the stdout tail the driver parses
-      .config("spark.sql.debug.maxToStringFields", "10000")
-      // Shuffle I/O for this runner's VM filesystem (round-12 finding,
-      // OPTIMIZATION_r12.md): the bypass-merge writer's
-      // FileChannel.transferTo mmaps every per-reduce piece and the
-      // munmap TLB shootdowns burn system CPU across all cores on this
-      // hypervisor (thread-dump histogram evidence); the sort writer
-      // emits ONE file per map task. Pure I/O-path choices — results
-      // unaffected; measured 2-10× on the stormy queries. Parameterized:
-      // healthy production kernels should override back to Spark's
-      // defaults (transferTo zero-copy, bypass threshold 200).
-      .config("spark.file.transferTo",
-        sys.env.getOrElse("SPARK_GRAFT_TRANSFERTO", "false"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Fixed pre-bench warm protocol (round-7 verdict item #1) — every run
     // pays the same one-time costs BEFORE any query is timed:
@@ -50,11 +26,19 @@ object Bench {
     // as their own labeled lines — otherwise their cost lands on whichever
     // query touches them first and round-over-round per-query numbers are
     // incomparable (round-4 verdict item #1).
+    // Anything that throws is named in "failed" (fixtures as
+    // "fixture:<name>"), left out of every sum, and fails the exit code:
+    // a thrown query must never read as a fast one.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def fail(what: String, e: Throwable): Unit = {
+      System.err.println(s"[bench] $what failed: ${e.getMessage}")
+      failed += what
+    }
     val fixtures = (graft.queries.TsQueries.fixtures ++
-      graft.queries.PipelineQueries.fixtures).map { case (name, fn) =>
+      graft.queries.PipelineQueries.fixtures).flatMap { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir) } catch { case _: Throwable => () }
-      name -> (System.nanoTime() - t0) / 1e9
+      try { fn(spark, sfDir); Some(name -> (System.nanoTime() - t0) / 1e9) }
+      catch { case NonFatal(e) => fail(s"fixture:$name", e); None }
     }
     // name-sorted run order: HashMap iteration order would otherwise
     // shift which query runs first between rounds.
@@ -104,17 +88,19 @@ object Bench {
     // mean one thing each. SPARK_GRAFT_CLEAR_PER_REP=true opts into
     // fully cold reps for diagnosis.
     val clearPerRep = sys.env.get("SPARK_GRAFT_CLEAR_PER_REP").contains("true")
-    val results = selected.map { case (name, fn) =>
+    val results = selected.flatMap { case (name, fn) =>
       def once(): (Double, Double) = {
         if (clearPerRep) graft.ops.Dedup.clearSharedPersists()
         val t0 = System.nanoTime(); val c0 = processCpuSec()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        fn(spark, sfDir).count()
         ((System.nanoTime() - t0) / 1e9, processCpuSec() - c0)
       }
-      val runs = Vector.fill(reps)(once())
-      // keep arrival order for rep-1 (cold) reporting alongside the
-      // sorted spread — (name, sorted walls, sorted cpus, first wall)
-      (name, runs.map(_._1).sorted, runs.map(_._2).sorted, runs.head._1)
+      try {
+        val runs = Vector.fill(reps)(once())
+        // keep arrival order for rep-1 (cold) reporting alongside the
+        // sorted spread — (name, sorted walls, sorted cpus, first wall)
+        Some((name, runs.map(_._1).sorted, runs.map(_._2).sorted, runs.head._1))
+      } catch { case NonFatal(e) => fail(name, e); None }
     }
     val loadEnd = loadavg()
     def median(ts: Vector[Double]): Double = ts(ts.size / 2)
@@ -142,6 +128,7 @@ object Bench {
     val fxJson = fixtures.map { case (k, v) => "\"" + k + "\":" + s2(v) }
       .mkString("{", ",", "}")
     def loadJson(l: Vector[Double]) = l.map(s2).mkString("[", ",", "]")
+    def failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val envJson = s""""cpu_total":${s3(cpuTotal)},"value_rep1":${s3(totalRep1)},"contended":$contended,"cores":$cores,"loadavg_start":${loadJson(loadStart)},"loadavg_end":${loadJson(loadEnd)}"""
     // Full per-query spread — every query, no char cap — goes to a file
     // the driver (and judge) can read: bench.json at the repo root.
@@ -152,14 +139,13 @@ object Bench {
       val qsCpu = results.map { case (k, _, cs, _) =>
         "\"" + k + "\":" + cs.map(s3).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${s3(total)},"unit":"sec","reps":$reps,$envJson,"queries_spread":$qs,"queries_cpu":$qsCpu,"fixtures":$fxJson,"fixtures_sum":${s2(fxSum)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${s3(total)},"unit":"sec","reps":$reps,$envJson,"failed":$failedJson,"queries_spread":$qs,"queries_cpu":$qsCpu,"fixtures":$fxJson,"fixtures_sum":${s2(fxSum)},"sf":"$sfDir"}"""
     }
-    try {
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        if (only.isDefined) "/tmp/bench_only.json" else "bench.json")
-      java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        (fullJson + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      if (only.isDefined) "/tmp/bench_only.json" else "bench.json")
+    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
+      (fullJson + "\n").getBytes("UTF-8"))
+    catch { case NonFatal(e) => fail(s"write:$out", e) }
     // The driver keeps only the LAST 2000 chars of stdout, and sbt appends
     // a ~75-char "[success]" line after us. So the whole JSON line must
     // fit in ~1880 chars: print the slowest queries individually (what the
@@ -181,7 +167,7 @@ object Bench {
       val omitted =
         if (rest.isEmpty) ""
         else s""","omitted_n":${rest.size},"omitted_sum":${s3(rest.map(_._2).sum)}"""
-      s"""{"metric":"total","value":${s3(total)},"unit":"sec","reps":$reps,$envJson,"queries":$qs$omitted,"spread":$spreadJson,"fixtures":$fxJson,"fixtures_sum":${s2(fxSum)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${s3(total)},"unit":"sec","reps":$reps,$envJson,"failed":$failedJson,"queries":$qs$omitted,"spread":$spreadJson,"fixtures":$fxJson,"fixtures_sum":${s2(fxSum)},"sf":"$sfDir"}"""
     }
     // Sub-0.25s queries fold into omitted_n/omitted_sum by default —
     // they're noise-floor numbers the judge reads only in aggregate —
@@ -195,5 +181,6 @@ object Bench {
     spark.stop()
     println(line(keep))
     Console.out.flush()
+    if (failed.nonEmpty) System.exit(1)
   }
 }

@@ -10,13 +10,17 @@ import graft.tsdb._
   * design holds beyond the sf corpora. Usage: runMain graft.ScaleCheck
   * [nSeries] [nSamplesPerSeries] */
 object ScaleCheck {
+  private def time[T](name: String)(f: => T): T = {
+    val t0 = System.nanoTime(); val r = f
+    println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
+  }
+
   def main(args: Array[String]): Unit = {
     val nSeries = if (args.nonEmpty) args(0).toInt else 2000
     val nSamples = if (args.length > 1) args(1).toInt else 5760 // 2 days @30s
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // 32 cores whatever the host: the byte budgets below are sized for
+    // 32 shuffle partitions
+    val spark = GraftSession.builder(cores = 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_SCALE_SECTION=curate runs just the end-to-end
     // curation rehearsal (iteration on one section shouldn't cost the
@@ -88,11 +92,6 @@ object ScaleCheck {
       return
     }
     val dir = java.nio.file.Files.createTempDirectory("graft-scale").resolve("store").toString
-
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
 
     // generate long form distributed (never collected on the driver)
     val t0ms = 1700000000000L
@@ -614,10 +613,6 @@ object ScaleCheck {
     * scrape-archive throughput. Standalone:
     * SPARK_GRAFT_SCALE_SECTION=expo. */
   private def expoAtScale(spark: SparkSession): Unit = {
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
     import graft.tsdb.{Exposition, TsSchema}
     val n = 20000000L
     val canon = TsSchema.canonicalizeStatic(
@@ -656,18 +651,6 @@ object ScaleCheck {
     * at a group count (7200 series-days) the sf fixtures never reach.
     * Standalone: SPARK_GRAFT_SCALE_SECTION=nhist. */
   private def nativeHistAtScale(spark: SparkSession): Unit = {
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    })
     import graft.ops.NativeHistogram
     val n = 50000000L
     val t0ms = 1704844800000L
@@ -683,13 +666,11 @@ object ScaleCheck {
         .cast("double").as("value"))
     val groups = Seq("event_type", "day_t")
 
-    shuffleBytes.set(0L)
-    val full = time(s"native-hist observe: $n obs -> 7200 groups") {
+    val (full, obsShuffle) = ShuffleMeter(spark)(time(s"native-hist observe: $n obs -> 7200 groups") {
       val f = NativeHistogram.observe(obs(0, n), col("value"), 2, groups)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       f.count(); f
-    }
-    val obsShuffle = shuffleBytes.get()
+    })
     println(f"SCALE native-hist observe shuffle ${obsShuffle / 1024.0 / 1024.0}%.1f MiB")
     // partial-aggregate shuffle: bounded by partitions x occupied
     // (group, bucket) cells (~32 x 267k rows, measured ~114 MiB), NOT
@@ -761,10 +742,6 @@ object ScaleCheck {
     * order writable at 100 TB without a single-partition sort.
     * Standalone: SPARK_GRAFT_SCALE_SECTION=shuffle. */
   private def shuffleAtScale(spark: SparkSession): Unit = {
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
     val n = 20000000L
     // synthetic token counts 1..512, arithmetic total known in closed form
     val docs = spark.range(n).select(col("id"),
@@ -873,10 +850,6 @@ object ScaleCheck {
     * SPARK_GRAFT_SCALE_SECTION=govern. */
   private def governAtScale(spark: SparkSession): Unit = {
     import graft.ops.{Behavior, Checks, Classifier, Eval, Profile}
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
     val nUsers = 3000000L
     // per user: view@u*1000, click@+10; every 10th user purchases @+20
     // (completes); every 5th-but-not-10th user purchases @-5 — BEFORE
@@ -1034,10 +1007,6 @@ object ScaleCheck {
   }
 
   private def dsirAtScale(spark: SparkSession): Unit = {
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
     val words = 30
     def synthDoc(seed: org.apache.spark.sql.Column, vocab: String, vocabSize: Int) =
       concat_ws(" ", transform(sequence(lit(1), lit(words)),
@@ -1071,18 +1040,6 @@ object ScaleCheck {
     * a duplicate must never re-enter scoring). Standalone entry:
     * SPARK_GRAFT_SCALE_SECTION=curate runMain graft.ScaleCheck. */
   private def curateAtScale(spark: SparkSession): Unit = {
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    })
     val nCur = 2000000L
     val nPrior = 100000L
     // planted classes, in generator priority order:
@@ -1138,16 +1095,15 @@ object ScaleCheck {
     // the amortized artifact: the PRIOR corpus's minhash-signature index
     // (at 100 TB a parquet table refreshed with the corpus, never
     // per-run work)
-    val curIndex = time(s"curation index: minhash signatures, $nPrior prior docs") {
+    val (curIndex, indexBytes) = ShuffleMeter(spark)(time(s"curation index: minhash signatures, $nPrior prior docs") {
       val ix = graft.ops.Dedup.minhashSignatures(
         spark.range(nPrior).select(col("id").as("doc_id"),
           priorText(col("id")).as("text")),
         "doc_id", "text", numHashes = 16, shingleSize = 3, bands = 4)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       ix.count(); ix
-    }
-    val shuffle0 = shuffleBytes.get()
-    time("curate 2M docs end-to-end (quality × near-dup × span × decontam)") {
+    })
+    val (_, pipelineBytes) = ShuffleMeter(spark)(time("curate 2M docs end-to-end (quality × near-dup × span × decontam)") {
       // 1. quality floor — doc-local, codegen'd
       val afterQuality = curDocs
         .where(graft.ops.TextAnalysis.qualityScore(col("text")) >= 0.2)
@@ -1180,10 +1136,9 @@ object ScaleCheck {
       require(nS - nFinal == nContam, s"decontam dropped ${nS - nFinal}, expected $nContam")
       afterQuality.unpersist(false); afterGate.unpersist(false)
       afterSpan.unpersist(false)
-    }
-    val pipelineBytes = shuffleBytes.get() - shuffle0
+    })
     println(f"SCALE curate shuffleWrite=${pipelineBytes / 1073741824.0}%.2f GiB " +
-      f"(indexBuild+pipeline total=${shuffleBytes.get() / 1073741824.0}%.2f GiB)")
+      f"(indexBuild+pipeline total=${(indexBytes + pipelineBytes) / 1073741824.0}%.2f GiB)")
     // The shape invariant the timings only imply: past the first
     // projection every shuffle in the composed pipeline is digest-only
     // (minhash signatures, span-window hashes, shingle digests, ids) —
@@ -1210,18 +1165,6 @@ object ScaleCheck {
     * exchange. Standalone: SPARK_GRAFT_SCALE_SECTION=qsketch. */
   private def qsketchAtScale(spark: SparkSession): Unit = {
     import graft.ops.Sketches
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    })
     val n = 50000000L
     val s = 4096
     val qs = Seq(0.5, 0.9, 0.99)
@@ -1238,12 +1181,10 @@ object ScaleCheck {
     require(plan.contains("partial_bottom_k_sample"),
       "sample stage lost its partial-mode heap aggregate below the exchange")
 
-    shuffleBytes.set(0L)
-    val est = time(s"qsketch: $n rows -> 20 groups x s=$s, 3 quantiles") {
+    val (est, sampleShuffle) = ShuffleMeter(spark)(time(s"qsketch: $n rows -> 20 groups x s=$s, 3 quantiles") {
       Sketches.qsampleQuantile(rows(0, n), col("g"), col("uid"), col("v"),
         s, qs).collect()
-    }
-    val sampleShuffle = shuffleBytes.get()
+    })
     println(f"SCALE qsketch shuffle ${sampleShuffle / 1024.0 / 1024.0}%.1f MiB")
     // 20 groups x 4096 x 32 partitions x ~30B ≈ 75 MiB worst case; the
     // 50M-row stream at this width would be ~1.6 GiB
@@ -1294,17 +1235,6 @@ object ScaleCheck {
     * ≪ payload mass. Standalone: SPARK_GRAFT_SCALE_SECTION=media. */
   private def mediaDedupAtScale(spark: SparkSession): Unit = {
     import spark.implicits._
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
     val n = 1000000L
     val planted = n / 5
     val payloadBytes = n * (54L + 16 * 48) // 822 B per image
@@ -1336,14 +1266,12 @@ object ScaleCheck {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     time("assert planted recall + false-pair bound + shuffle bound") {
-      val total = pairs.count()
-      val plantedFound = pairs
-        .where(col("id2") === col("id1") + 1 && col("id1") % 5 === 0).count()
+      val ((total, plantedFound), sw) = ShuffleMeter(spark)((pairs.count(),
+        pairs.where(col("id2") === col("id1") + 1 && col("id1") % 5 === 0).count()))
       require(plantedFound == planted,
         s"found $plantedFound of $planted planted near-dup pairs")
       require(total - planted <= 100,
         s"${total - planted} unplanted pairs — hash space degraded")
-      val sw = shuffleWrite.get()
       require(sw < payloadBytes / 2,
         s"shuffled $sw bytes against ${payloadBytes}B of payload — " +
           "payloads are crossing an exchange")
@@ -1351,7 +1279,6 @@ object ScaleCheck {
         f"shuffle ${sw / 1e6}%.1f MB vs payload ${payloadBytes / 1e6}%.1f MB")
     }
     pairs.unpersist(false)
-    spark.sparkContext.removeSparkListener(listener)
   }
 
   /** CROSS-FORMAT image dedup + TEMPORAL video dedup at scale — the
@@ -1378,17 +1305,6 @@ object ScaleCheck {
     * SPARK_GRAFT_SCALE_SECTION=mixed. */
   private def mixedMediaAtScale(spark: SparkSession): Unit = {
     import spark.implicits._
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
     def mix(a: Long): Long = {
       var x = a; x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
       x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L; x ^= x >>> 33; x
@@ -1437,14 +1353,13 @@ object ScaleCheck {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     time("assert cross-format planted recall + bounds") {
-      val total = pairs.count()
-      val plantedFound = pairs.where(col("id2") === col("id1") + imgOff &&
-        col("id1") % 5 === 0 && col("hamming") === 0L).count()
+      val ((total, plantedFound), sw) = ShuffleMeter(spark)((pairs.count(),
+        pairs.where(col("id2") === col("id1") + imgOff &&
+          col("id1") % 5 === 0 && col("hamming") === 0L).count()))
       require(plantedFound == imgPlanted,
         s"found $plantedFound of $imgPlanted planted cross-format pairs")
       require(total - imgPlanted <= 100,
         s"${total - imgPlanted} unplanted pairs — hash space degraded")
-      val sw = shuffleWrite.get()
       require(sw < imgPayload / 2,
         s"shuffled $sw bytes against ${imgPayload}B of payload")
       println(f"SCALE mixed-format dedup: $total pairs ($imgPlanted planted " +
@@ -1454,7 +1369,6 @@ object ScaleCheck {
     media.unpersist(false)
 
     // ---- temporal video ----------------------------------------------
-    shuffleWrite.set(0L)
     val vn = 100000L
     val vOff = 20000000L
     val vPlanted = vn / 5
@@ -1495,14 +1409,13 @@ object ScaleCheck {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     time("assert trimmed-re-upload recovery + bounds") {
-      val total = vPairs.count()
-      val plantedFound = vPairs.where(col("id2") === col("id1") + vOff &&
-        col("id1") % 5 === 0 && col("hamming") === 0L).count()
+      val ((total, plantedFound), sw) = ShuffleMeter(spark)((vPairs.count(),
+        vPairs.where(col("id2") === col("id1") + vOff &&
+          col("id1") % 5 === 0 && col("hamming") === 0L).count()))
       require(plantedFound == vPlanted,
         s"found $plantedFound of $vPlanted planted trimmed re-uploads")
       require(total - vPlanted <= 100,
         s"${total - vPlanted} unplanted pairs — frame-hash space degraded")
-      val sw = shuffleWrite.get()
       require(sw < vidPayload / 2,
         s"shuffled $sw bytes against ${vidPayload}B of clip payload")
       println(f"SCALE temporal video dedup: $total pairs ($vPlanted planted " +
@@ -1512,7 +1425,6 @@ object ScaleCheck {
     clips.unpersist(false)
 
     // ---- temporal audio ----------------------------------------------
-    shuffleWrite.set(0L)
     val an = 100000L
     val aOff = 30000000L
     val aPlanted = an / 5
@@ -1550,9 +1462,9 @@ object ScaleCheck {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     time("assert trimmed-audio recovery + bounds") {
-      val total = aPairs.count()
-      val plantedFound = aPairs.where(col("id2") === col("id1") + aOff &&
-        col("id1") % 5 === 0 && col("hamming") === 0L).count()
+      val ((total, plantedFound), sw) = ShuffleMeter(spark)((aPairs.count(),
+        aPairs.where(col("id2") === col("id1") + aOff &&
+          col("id1") % 5 === 0 && col("hamming") === 0L).count()))
       require(plantedFound == aPlanted,
         s"found $plantedFound of $aPlanted planted trimmed tones")
       // energy-ORDER bits are a Markov chain (adjacent bits share a
@@ -1561,7 +1473,6 @@ object ScaleCheck {
       // among 4.3M sub-hashes; bound at 1% of the planted mass
       require(total - aPlanted <= aPlanted / 100,
         s"${total - aPlanted} unplanted pairs — envelope space degraded")
-      val sw = shuffleWrite.get()
       // the audio invariant is BYTES PER SUB-HASH, not payload ratio:
       // these fixture clips are an unrealistic 8 KB (real clips are
       // MBs for the same ~36 windows), so payload would mislead — what
@@ -1576,7 +1487,6 @@ object ScaleCheck {
     }
     aPairs.unpersist(false)
     tones.unpersist(false)
-    spark.sparkContext.removeSparkListener(listener)
   }
 
   /** End-to-end WebDataset curation at 260k samples: avalanche-mixed
@@ -1591,10 +1501,6 @@ object ScaleCheck {
     * class. Standalone: SPARK_GRAFT_SCALE_SECTION=wds. */
   private def webdatasetAtScale(spark: SparkSession): Unit = {
     import spark.implicits._
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
     val n = 200000L
     val c = 20000L
     def mix(a: Long): Long = {
@@ -1696,10 +1602,6 @@ object ScaleCheck {
   private def webIngestAtScale(spark: SparkSession): Unit = {
     import graft.ops.WebText
     import graft.sources.WarcReader
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"SCALE $name ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
     val nFiles = 32
     val docsPerFile = 8000
     val nDocs = nFiles.toLong * docsPerFile

@@ -78,10 +78,7 @@ object ServeMain {
   }
 
   def main(rawArgs: Array[String]): Unit = {
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val (_, args0) = graft.tsdb.GraftConfig.fromArgs(
       rawArgs, spark.sparkContext.hadoopConfiguration)

@@ -27,17 +27,18 @@ import org.apache.spark.sql.functions._
   *  - `query <storeDir> <expr> <startSec> <endSec> <stepSec>` —
   *    `promtool query range` against a store dir, one line per
   *    (series, step)
+  *  - `plan <query...>` — `explain("formatted")` of each named
+  *    [[SparkEntry]] query over the corpus dir `SPARK_GRAFT_SF_DIR`
+  *    (required), written to
+  *    `<SPARK_GRAFT_PLAN_DIR>/<query><SPARK_GRAFT_PLAN_SUFFIX>.txt`
+  *    (suffix e.g. `_before` / `_after`, for diffing a change's plans)
   *
   * Each subcommand returns an exit code (`run`), so specs drive the
   * logic without forking a JVM; `main` owns `System.exit`. */
 object ToolMain {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[*]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val code = run(spark, args, println(_))
     spark.stop()
@@ -64,13 +65,40 @@ object ToolMain {
       analyze(spark, dir, rest.headOption.map(_.toInt).getOrElse(10), out)
     case "query" +: Seq(dir, expr, startS, endS, stepS) =>
       query(spark, dir, expr, startS.toLong, endS.toLong, stepS.toLong, out)
+    case "plan" +: names if names.nonEmpty => plan(spark, names, out)
     case _ =>
       out("usage: check-rules <file...> | test-rules <file...> | " +
         "promql-test <file...> | check-config <file> | " +
         "backfill <openmetricsFile> <storeDir> | " +
         "tsdb-analyze <storeDir> [topK] | " +
-        "query <storeDir> <expr> <startSec> <endSec> <stepSec>")
+        "query <storeDir> <expr> <startSec> <endSec> <stepSec> | " +
+        "plan <query...>")
       2
+  }
+
+  /** Each query runs once before its plan is taken, so the plan is the
+    * steady-state one over the session's cached fixture forms, exactly
+    * as the bench sees it. */
+  private def plan(spark: SparkSession, names: Seq[String],
+                   out: String => Unit): Int = {
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r12")
+    val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "_after")
+    new java.io.File(outDir).mkdirs()
+    names.map { name =>
+      try {
+        val q = SparkEntry.queries(name)
+        val df = q(spark, sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+          throw new IllegalArgumentException("SPARK_GRAFT_SF_DIR is not set")))
+        df.count()
+        val txt = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$outDir/$name$suffix.txt"), txt)
+        out(s"[plandump] $name$suffix ok (${txt.length} chars)"); 0
+      } catch { case e: Exception =>
+        out(s"[plandump] $name FAILED: ${e.getMessage}"); 1
+      }
+    }.max
   }
 
   private def checkRules(spark: SparkSession, file: String,

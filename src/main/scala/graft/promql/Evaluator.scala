@@ -724,8 +724,8 @@ final class Evaluator(querier: TsQuerier, mint: Long, maxt: Long,
       case "clamp_min" => v => greatest(v, lit(ps(0)))
       case "clamp_max" => v => least(v, lit(ps(0)))
       // calendar functions read the VALUE as epoch seconds in UTC
-      // (callers must pin spark.sql.session.timeZone=UTC, as Verify
-      // and Bench do); Prometheus's day_of_week is 0=Sunday while
+      // (the session zone, which GraftSession pins to UTC for every
+      // entry point); Prometheus's day_of_week is 0=Sunday while
       // Spark's dayofweek is 1=Sunday
       case "minute" => v => minute(timestamp_seconds(v)).cast("double")
       case "hour" => v => hour(timestamp_seconds(v)).cast("double")

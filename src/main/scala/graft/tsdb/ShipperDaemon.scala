@@ -85,11 +85,7 @@ object ShipperDaemon {
   * the shutdown hook performs the final ship before the JVM exits. */
 object ShipperMain {
   def main(rawArgs: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val (_, args) =
       GraftConfig.fromArgs(rawArgs, spark.sparkContext.hadoopConfiguration)

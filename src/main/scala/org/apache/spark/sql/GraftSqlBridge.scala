@@ -31,6 +31,12 @@ object GraftSqlBridge {
   def sessionUUID(s: SparkSession): String =
     s.asInstanceOf[classic.SparkSession].sessionUUID
 
+  /** Block until every listener event posted so far has been delivered
+    * (`listenerBus` is `private[spark]`). Listener delivery is async, so
+    * a listener read right after an action can still miss its stages. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** ACTUAL accumulated bytes of a persisted DataFrame's materialized
     * in-memory relation — the `CachedRDDBuilder.sizeInBytesStats`
     * accumulator the executors fill as cached batches are built. 0 while

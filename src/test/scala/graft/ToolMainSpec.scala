@@ -78,6 +78,11 @@ class ToolMainSpec extends AnyFunSuite {
     assert(cu == 2 && ou.head.startsWith("usage:"))
   }
 
+  test("plan: an unknown query fails loudly") {
+    val (c, o) = run("plan", "no_such_query")
+    assert(c == 1 && o.size == 1 && o.head.startsWith("[plandump] no_such_query FAILED"), o)
+  }
+
   test("backfill: openmetrics dump -> store; analyze and query read it back") {
     val dump = Files.createTempFile("om", ".txt")
     // OpenMetrics: seconds timestamps, # EOF terminator

@@ -1,13 +1,12 @@
 package graft.queries
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkSpec
+import graft.{ShuffleMeter, SparkSpec}
 
 /** Order-of-magnitude shuffle tripwires for headline queries at sf0.01:
   * each query is warmed once (fixture/store builds land outside the
-  * measurement, as they do in production serving), then re-run under a
-  * listener that sums shuffle WRITE bytes across its stages. The
+  * measurement, as they do in production serving), then re-run under
+  * [[ShuffleMeter]], which sums shuffle WRITE bytes across its stages. The
   * budgets are ~5-10× the measured values — loose enough to never flake
   * on plan jitter, tight enough that the classic 100-TB regressions
   * (document text riding a shuffle, a candidate join going cartesian, a
@@ -21,22 +20,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   private def shuffleBytesOf(name: String): Long = {
     // warm: fixture builds + persisted stores happen here
     graft.SparkEntry.queries(name)(spark, dir).count()
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        bytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      graft.SparkEntry.queries(name)(spark, dir).count()
-      // listener delivery is async: wait until the counter stabilizes
-      var prev = -1L
-      var spins = 0
-      while (bytes.get() != prev && spins < 40) {
-        prev = bytes.get(); Thread.sleep(50); spins += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    bytes.get()
+    ShuffleMeter(spark)(graft.SparkEntry.queries(name)(spark, dir).count())._2
   }
 
   // (query, budget in bytes) — see scaladoc for how budgets are set
