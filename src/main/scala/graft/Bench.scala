@@ -90,7 +90,7 @@ object Bench {
     val clearPerRep = sys.env.get("SPARK_GRAFT_CLEAR_PER_REP").contains("true")
     val results = selected.flatMap { case (name, fn) =>
       def once(): (Double, Double) = {
-        if (clearPerRep) graft.ops.Dedup.clearSharedPersists()
+        if (clearPerRep) Persisted.clear()
         val t0 = System.nanoTime(); val c0 = processCpuSec()
         fn(spark, sfDir).count()
         ((System.nanoTime() - t0) / 1e9, processCpuSec() - c0)
@@ -105,7 +105,7 @@ object Bench {
     val loadEnd = loadavg()
     def median(ts: Vector[Double]): Double = ts(ts.size / 2)
     // long-lived sessions must not pin per-plan persisted frames forever
-    graft.ops.Dedup.clearSharedPersists()
+    Persisted.clear()
     def s3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def s2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     val total = results.map(r => median(r._2)).sum

@@ -27,13 +27,13 @@ object ScaleCheck {
     // ~25-minute full sweep)
     if (sys.env.get("SPARK_GRAFT_SCALE_SECTION").contains("curate")) {
       curateAtScale(spark)
-      graft.ops.Dedup.clearSharedPersists()
+      Persisted.clear()
       spark.stop()
       return
     }
     if (sys.env.get("SPARK_GRAFT_SCALE_SECTION").contains("dsir")) {
       dsirAtScale(spark)
-      graft.ops.Dedup.clearSharedPersists()
+      Persisted.clear()
       spark.stop()
       return
     }
@@ -44,7 +44,7 @@ object ScaleCheck {
     }
     if (sys.env.get("SPARK_GRAFT_SCALE_SECTION").contains("govern")) {
       governAtScale(spark)
-      graft.ops.Dedup.clearSharedPersists()
+      Persisted.clear()
       spark.stop()
       return
     }
@@ -70,19 +70,19 @@ object ScaleCheck {
     }
     if (sys.env.get("SPARK_GRAFT_SCALE_SECTION").contains("media")) {
       mediaDedupAtScale(spark)
-      graft.ops.Dedup.clearSharedPersists()
+      Persisted.clear()
       spark.stop()
       return
     }
     if (sys.env.get("SPARK_GRAFT_SCALE_SECTION").contains("mixed")) {
       mixedMediaAtScale(spark)
-      graft.ops.Dedup.clearSharedPersists()
+      Persisted.clear()
       spark.stop()
       return
     }
     if (sys.env.get("SPARK_GRAFT_SCALE_SECTION").contains("wds")) {
       webdatasetAtScale(spark)
-      graft.ops.Dedup.clearSharedPersists()
+      Persisted.clear()
       spark.stop()
       return
     }
@@ -592,7 +592,7 @@ object ScaleCheck {
 
     curateAtScale(spark)
 
-    graft.ops.Dedup.clearSharedPersists()
+    Persisted.clear()
     spark.stop()
   }
 

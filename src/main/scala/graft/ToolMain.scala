@@ -31,7 +31,8 @@ import org.apache.spark.sql.functions._
   *    [[SparkEntry]] query over the corpus dir `SPARK_GRAFT_SF_DIR`
   *    (required), written to
   *    `<SPARK_GRAFT_PLAN_DIR>/<query><SPARK_GRAFT_PLAN_SUFFIX>.txt`
-  *    (suffix e.g. `_before` / `_after`, for diffing a change's plans)
+  *    (dir default `target/plans`, suffix default empty; e.g.
+  *    `_before` / `_after` for diffing a change's plans)
   *
   * Each subcommand returns an exit code (`run`), so specs drive the
   * logic without forking a JVM; `main` owns `System.exit`. */
@@ -81,8 +82,8 @@ object ToolMain {
     * as the bench sees it. */
   private def plan(spark: SparkSession, names: Seq[String],
                    out: String => Unit): Int = {
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r12")
-    val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "_after")
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "target/plans")
+    val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
     new java.io.File(outDir).mkdirs()
     names.map { name =>
       try {

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Persisted
 
 /** Banded candidate pairs — the blocking step behind every near-dup,
   * kNN-LSH and fuzzy-decontamination operator: band keys fan out to
@@ -71,7 +72,7 @@ object Banded {
     * proportional to the output. */
   def hammingPairs(docs: DataFrame, bandKeys: Column => Seq[Column],
                    maxDist: Int): DataFrame = {
-    val d = Dedup.sharedPersist(docs)
+    val d = Persisted(docs)
     val values = d.select(col("h")).distinct()
     val hPairs = selfPairs(buckets(values, array(bandKeys(col("h")): _*),
         col("h").as("id")))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Persisted
 
 /** Train/test decontamination — the LLM-pipeline step that removes
   * benchmark (eval-set) material from a training corpus before training.
@@ -72,9 +73,9 @@ object Decontaminate {
   def flagFuzzy(corpus: DataFrame, benchmark: DataFrame, idCol: String,
                 textCol: String, numHashes: Int = 16, bands: Int = 4,
                 shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val cs = Dedup.sharedPersist(
+    val cs = Persisted(
       Dedup.minhashSignatures(corpus, idCol, textCol, numHashes, shingleSize, bands))
-    val bs = Dedup.sharedPersist(
+    val bs = Persisted(
       Dedup.minhashSignatures(benchmark, idCol, textCol, numHashes, shingleSize, bands))
     val cb = Dedup.lshBuckets(cs, bands)
       .select(col("band"), col("band_key"), col("id").as("cid"))
@@ -168,7 +169,7 @@ object Decontaminate {
     // pinned: both the candidate pass (exploded below) and the
     // containment verify read the benchmark's shingle sets — without the
     // persist the benchmark is shingled once per consumer
-    val bs = Dedup.sharedPersist(benchmark.select(col(idCol).as("bid"),
+    val bs = Persisted(benchmark.select(col(idCol).as("bid"),
         Dedup.shingleHashes(col(textCol), shingleSize).as("bhs"))
       .where(size(col("bhs")) > 0))
     val bex = bs.select(col("bid"), explode(col("bhs")).as("h"))
@@ -192,7 +193,7 @@ object Decontaminate {
   }
 
   /** One-shot form: builds the index inline, pinning its shingle frame
-    * through [[Dedup.sharedPersist]] — `rarePostings` derives from the
+    * through [[graft.Persisted]] — `rarePostings` derives from the
     * same subtree, so the candidate pass and the containment verify
     * join both read the one persisted copy instead of re-shingling the
     * corpus (CacheManager substitutes the cached subplan). */
@@ -200,7 +201,7 @@ object Decontaminate {
                     textCol: String, shingleSize: Int = 3,
                     threshold: Double = 0.5, dfCap: Int = 100): DataFrame = {
     val idx = rareShingleIndex(corpus, idCol, textCol, shingleSize, dfCap)
-    flagFuzzyRare(idx.copy(shingles = Dedup.sharedPersist(idx.shingles)),
+    flagFuzzyRare(idx.copy(shingles = Persisted(idx.shingles)),
       benchmark, idCol, textCol, shingleSize, threshold)
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Persisted
 import graft.functions._
 
 /** Deduplication operators for large-scale document corpora.
@@ -19,62 +20,6 @@ import graft.functions._
   * across engines (the DuckDB oracle recomputes them bit-identically).
   */
 object Dedup {
-
-  /** Per-JVM registry of persisted heavy intermediates, keyed by
-    * (session, canonical plan). The mid-pipeline persists below are
-    * optimizer barriers that the RETURNED frame consumes lazily, so the
-    * producing function cannot unpersist them before returning; without
-    * a registry every invocation pins a FRESH copy and repeated runs in
-    * one session (Bench times sub-2s queries three times) accumulate
-    * executor storage until eviction pressure. Keying on the
-    * canonicalized plan makes a re-invocation over the same input reuse
-    * the already-persisted blocks instead. Entries live until
-    * [[clearSharedPersists]] — the same session-scoped lifecycle as the
-    * query-layer fixture caches — and the registry is a bounded LRU, so
-    * a long-lived session that never clears (a per-micro-batch
-    * spanDupScoreAgainst loop, say) evicts-and-unpersists its oldest
-    * plan instead of accumulating executor storage without limit. */
-  private val MaxSharedPersists = 64
-  private val sharedPersists = new java.util.LinkedHashMap[
-      (org.apache.spark.sql.SparkSession,
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      DataFrame](16, 0.75f, /*accessOrder=*/ true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(org.apache.spark.sql.SparkSession,
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame])
-        : Boolean =
-      size > MaxSharedPersists && { e.getValue.unpersist(false); true }
-  }
-
-  private[graft] def sharedPersist(df: DataFrame): DataFrame =
-    sharedPersists.synchronized {
-      // key on the session REFERENCE (SparkSession equality is identity,
-      // so no cross-session hash collisions) plus the canonicalized plan
-      // OBJECT: structural equality covers LocalRelation data too (its
-      // toString does not — two in-memory frames with the same schema
-      // would collide on a string key)
-      val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized)
-      val got = sharedPersists.get(key)
-      if (got != null) got
-      else if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-        // already pinned outside this registry (e.g. a fixture cache
-        // persisted the same plan directly): CacheManager will substitute
-        // the cached subplan anyway, and persisting again only logs
-        // "Asked to cache already cached data" — return as-is and leave
-        // the lifecycle with whoever persisted first
-        df
-      } else {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        sharedPersists.put(key, p)
-        p
-      }
-    }
-
-  /** Release every shared persisted intermediate (all sessions). */
-  def clearSharedPersists(): Unit = sharedPersists.synchronized {
-    sharedPersists.values.forEach(v => v.unpersist(false))
-    sharedPersists.clear()
-  }
 
   /** Exact duplicate groups by content digest. Returns one row per
     * distinct content: digest, representative (min) id, count. */
@@ -185,7 +130,7 @@ object Dedup {
                  threshold: Double = 0.6,
                  maxBucket: Int = Int.MaxValue): DataFrame = {
     // band keys are fused into the same single pass as hs/sig
-    val sigs = sharedPersist(
+    val sigs = Persisted(
       minhashSignatures(df, idCol, textCol, numHashes, shingleSize, bands))
     val hs = sigs.select(col("id"), col("hs"))
     lshCandidatePairs(sigs, bands, maxBucket)
@@ -212,7 +157,7 @@ object Dedup {
                         numHashes: Int = 16, bands: Int = 4,
                         shingleSize: Int = 3,
                         threshold: Double = 0.6): DataFrame = {
-    val nsigs = sharedPersist(
+    val nsigs = Persisted(
       minhashSignatures(newDocs, idCol, textCol, numHashes, shingleSize, bands))
     val nb = lshBuckets(nsigs, bands)
       .select(col("band"), col("band_key"), col("id").as("new_id"))
@@ -246,7 +191,7 @@ object Dedup {
     // DataFrame per consumer otherwise). The explode below fans out over a
     // concrete cached column — GenerateExec re-evaluates its child per
     // OUTPUT row, so it must never be handed the heavy hash expression.
-    val base = sharedPersist(
+    val base = Persisted(
       df.select(col(idCol).as("id"), blockCol.as("blk"),
           shingleHashes(col(textCol), shingleSize).as("hs"))
         .where(size(col("hs")) > 0))
@@ -452,7 +397,7 @@ object Dedup {
     * one span window score 0 and are kept (nothing to compare). */
   def spanDupScore(df: DataFrame, idCol: String, textCol: String,
                    spanTokens: Int, maxDupFrac: Double = 0.5): DataFrame = {
-    val spans = sharedPersist(
+    val spans = Persisted(
       df.select(col(idCol).as("doc_id"),
           explode(shingles(col(textCol), spanTokens)).as("span"))
         .select(col("doc_id"), md5(col("span")).as("sd")))
@@ -494,7 +439,7 @@ object Dedup {
   def spanDupScoreAgainst(df: DataFrame, idCol: String, textCol: String,
                           spanTokens: Int, dupIndex: DataFrame,
                           maxDupFrac: Double = 0.5): DataFrame = {
-    val spans = sharedPersist(
+    val spans = Persisted(
       df.select(col(idCol).as("doc_id"),
           explode(shingles(col(textCol), spanTokens)).as("span"))
         .select(col("doc_id"), md5(col("span")).as("sd")))
@@ -536,14 +481,14 @@ object Dedup {
   def maskDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
                           spanTokens: Int): DataFrame = {
     val k = spanTokens
-    val base = sharedPersist(df.select(col(idCol).as("doc_id"),
+    val base = Persisted(df.select(col(idCol).as("doc_id"),
       tokens(col(textCol)).as("t")))
     val winArr = when(size(col("t")) >= k,
       transform(sequence(lit(0), size(col("t")) - k), i =>
         struct(i.as("p"),
           hash60(concat_ws(" ", slice(col("t"), i + lit(1), lit(k)))).as("sd"))))
       .otherwise(array().cast("array<struct<p:int,sd:bigint>>"))
-    val wins = sharedPersist(base.select(col("doc_id"), winArr.as("wins")))
+    val wins = Persisted(base.select(col("doc_id"), winArr.as("wins")))
     val flat = wins.select(col("doc_id"), explode(col("wins")).as("w"))
       .select(col("doc_id"), col("w.p").as("p"), col("w.sd").as("sd"))
     // the dup tail over DISTINCT per-doc spans — same counts as spanIndex
@@ -589,7 +534,7 @@ object Dedup {
     // persist = optimizer barrier: the signature is computed once per
     // vector; the explode fans out over cheap slices of the concrete
     // column (GenerateExec re-evaluates its child per OUTPUT row)
-    val mat = sharedPersist(
+    val mat = Persisted(
       df.select(col(idCol).as("id"), v.as("v"),
         Similarity.srpSignature(v, dim, planesPerTable * tables).as("sigall")))
     val bucketed = Banded.buckets(mat,
@@ -659,7 +604,7 @@ object Dedup {
     // slim argmax: the vector must not ride through the k× crossJoin —
     // assign over (id, d, cell) rows only, rejoin v by id (measured 7×
     // at 101k vectors × 512 cells; see Similarity.ivfAssign)
-    val assigned = sharedPersist(
+    val assigned = Persisted(
       c.crossJoin(broadcast(cent))
         .select(col("id"), cosine_native(col("v"), col("centv")).as("d"), col("cell"))
         .groupBy(col("id"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.Persisted
 
 /** DSIR — Data Selection via Importance Resampling (Xie et al., NeurIPS
   * 2023): pick raw-pool documents whose hashed-n-gram distribution matches
@@ -124,7 +125,7 @@ object Dsir {
     val s = graft.functions.MinhashExpressions.nb_score(col(textCol), dense)
     // weights + resample (and bench repetitions) share one scoring pass:
     // the per-doc weight frame is tiny next to the corpus it summarizes
-    Dedup.sharedPersist(
+    Persisted(
       frame.select(col(idCol).as("id"), s.as("s"))
         .where(col("s.n_grams") > 0)
         .select(col("id"), col("s.n_grams").as("n_grams"),

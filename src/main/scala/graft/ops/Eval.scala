@@ -108,7 +108,7 @@ object Eval {
     // totals, diagonal) — unpersisted, each subtree re-ran the full
     // input scan (for langid_* that is the classifier over every
     // document, 3×); the matrix itself is bounded at |classes|² rows
-    val cm = graft.ops.Dedup.sharedPersist(
+    val cm = graft.Persisted(
       confusionMatrix(df, actual, predicted))
     val at = cm.groupBy(col("actual").as("cls")).agg(sum("n").as("n_actual"))
     val pt = cm.groupBy(col("predicted").as("cls")).agg(sum("n").as("n_predicted"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Persisted
 
 /** Multimodal-column plumbing: image/audio/video payloads travel as opaque
   * `BINARY` columns beside typed metadata; decode / feature-extract /
@@ -442,7 +443,7 @@ object Multimodal {
     * so id1 < id2 drops a clip's pairs with itself. */
   private def temporalHashPairs(media: DataFrame, idCol: String,
                                 hashes: Column, maxDist: Int): DataFrame = {
-    val vh = Dedup.sharedPersist(
+    val vh = Persisted(
       media.select(col(idCol).as("id"), explode_outer(hashes).as("dh"))
         .where(col("dh").isNotNull)
         .distinct()) // a clip's repeated sub-hashes collapse up front
@@ -539,7 +540,7 @@ object Multimodal {
     def banded(df: DataFrame, idAs: String, dhAs: String) =
       Banded.buckets(df, array(bandCols(col("dh"), maxDist): _*),
         col("id").as(idAs), col("dh").as(dhAs))
-    Banded.crossPairs(banded(Dedup.sharedPersist(newIndex), "new_id", "dh1"),
+    Banded.crossPairs(banded(Persisted(newIndex), "new_id", "dh1"),
         banded(corpusIndex, "corpus_id", "dh2"))
       .select(col("new_id"), col("corpus_id"),
         bit_count(col("dh1").bitwiseXOR(col("dh2"))).cast("long").as("hamming"))

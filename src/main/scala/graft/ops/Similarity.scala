@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions._
 import graft.functions.VectorExpressions.cosine_native
+import graft.Persisted
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -142,7 +143,7 @@ object Similarity {
       // computed once per vector; the explode below fans out over cheap
       // slices of the concrete column (GenerateExec re-evaluates its child
       // per OUTPUT row — never hand it the heavy expression)
-      val mat = Dedup.sharedPersist(
+      val mat = Persisted(
         df.select(col(id).as(idOut), v.as(idOut + "_v"),
           srpSignature(v, dim, planesPerTable * tables).as("sigall")))
       Banded.buckets(mat, srpBandKeys(col("sigall"), tables, planesPerTable),

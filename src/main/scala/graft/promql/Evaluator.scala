@@ -974,7 +974,7 @@ final class Evaluator(querier: TsQuerier, mint: Long, maxt: Long,
       // same selector produce this exact (canonicalized) plan — one
       // evaluation serves both arms of a stats query instead of two
       // full store reads; the frame is bounded at series × steps rows
-      graft.ops.Dedup.sharedPersist(
+      graft.Persisted(
         leBuckets(eval(narrowed))
           .where(col("le") === Double.PositiveInfinity)
           .groupBy(col("gkey"), col("t")).agg(max(col("cum")).as("v"))
@@ -994,7 +994,7 @@ final class Evaluator(querier: TsQuerier, mint: Long, maxt: Long,
         // shared-persisted for the same reason as `counts`: the _sum
         // companion read is identical between histogram_sum and
         // histogram_avg
-        graft.ops.Dedup.sharedPersist(
+        graft.Persisted(
           eval(s.copy(matchers = ms))
             .withColumn("labels", dropName(col("labels"))))
       case _ => sys.error(s"histogram_$stat needs an instant metric selector")
@@ -1013,7 +1013,7 @@ final class Evaluator(querier: TsQuerier, mint: Long, maxt: Long,
         // of the self-join below), and histogram_stddev / histogram_stdvar
         // over the same selector canonicalize to this same frame — one
         // store read + window pass instead of four
-        val d = graft.ops.Dedup.sharedPersist(leBuckets(eval(arg))
+        val d = graft.Persisted(leBuckets(eval(arg))
           .withColumn("cnt",
             col("cum") - coalesce(lag(col("cum"), 1).over(w), lit(0.0)))
           .withColumn("mid",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Classifier, CorpusShuffle, Dedup, Dsir, Eval, MediaScenes, Multimodal, Sampling, Similarity, TextAnalysis}
 import graft.functions._
+import graft.Persisted
 
 /** Training-data pipeline operators (dedup, similarity search, text
   * analysis, multimodal plumbing) wired to the driver's `documents` /
@@ -1787,16 +1788,16 @@ object PipelineQueries {
       val orig = MediaScenes.synthesize(d, "doc_id", "source", "bmp")
       // the orig index feeds the truth join AND the against-join of all
       // four transforms (8 consumers); each variant's hash frame feeds
-      // its truth join and (via the registry-matching sharedPersist
+      // its truth join and (via the registry-matching Persisted
       // inside mediaNearDupAgainst) its against-join — decode once per
       // corpus per execution instead of once per consumer (guide §5)
-      val index = Dedup.sharedPersist(Multimodal.mediaHashIndex(orig,
+      val index = Persisted(Multimodal.mediaHashIndex(orig,
         "media_id", Multimodal.imageDHash(col("payload"))))
       val perTransform = MediaScenes.Transforms.filter(_ != "none").map { t =>
         val v =
           if (t == "reenc") MediaScenes.synthesize(d, "doc_id", "source", "jpeg")
           else MediaScenes.synthesize(d, "doc_id", "source", "bmp", t)
-        val vHash = Dedup.sharedPersist(Multimodal.mediaHashIndex(v,
+        val vHash = Persisted(Multimodal.mediaHashIndex(v,
           "media_id", Multimodal.imageDHash(col("payload"))))
         // ground truth: exact hamming of each planted (orig, variant)
         val truth = vHash.select(col("id"), col("dh").as("dh_v"))
@@ -1983,7 +1984,7 @@ object PipelineQueries {
     "knn_recall_gain" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.where(col("vec_id") < 8)
-      val brute = Dedup.sharedPersist(
+      val brute = Persisted(
         Similarity.bruteForceTopK(q, e,
             "vec_id", "embedding", "vec_id", "embedding", k = 5)
           .select(col("query_id"), col("corpus_id")))
@@ -1993,7 +1994,7 @@ object PipelineQueries {
       // over-fetches 25 of — running the search twice (as before) paid
       // the probed-cell resolution, the store scan and the ranking
       // window twice for identical rows
-      val cands = Dedup.sharedPersist(
+      val cands = Persisted(
         Similarity.ivfPqSearchStored(q, ivfPqStore(s, dir),
           "vec_id", "embedding", kmCentroids(s, dir), "cell", "centv",
           pqCb(s, dir), m = 8, k = 16, topK = 25, nprobe = 3))

@@ -37,7 +37,7 @@ object RelationalQueries {
       // per join side (plans/r13/q_range_join_before.txt nodes 1-7 vs
       // 8-15). Bounded: 4 long-ish columns of the scanned fact slice
       // (guide §5 — persist a frame with two consumers).
-      val li = graft.ops.Dedup.sharedPersist(
+      val li = graft.Persisted(
         Tables.fanOut(t(s, dir, "lineitem")).select(
           col("l_orderkey"), col("l_linenumber"),
           col("l_suppkey").as("key"),
@@ -337,7 +337,7 @@ object RelationalQueries {
       // replay, open-row stale-update join). In production `current` is
       // a stored table — three scans; here it is a window pipeline, so
       // without the persist the events scan + key shuffle + sort ran 3×
-      val hist = graft.ops.Dedup.sharedPersist(
+      val hist = graft.Persisted(
         graft.ops.Scd.scd2(ev.where(col("t") < cut),
           Seq("user_id"), Seq("event_type"), "t", endOfTime))
       graft.ops.Scd.scd2Merge(hist, ev.where(col("t") >= cut),

@@ -1,6 +1,9 @@
 package graft.queries
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -65,16 +68,14 @@ object Tables {
   // invocation just to read a partition count that is a pure function
   // of (session, file set, split confs). Memoize it per (session,
   // canonicalized scan plan) — ~10-40 ms of driver work saved per
-  // query rep across the ~200 queries that read these tables. Bounded:
-  // a handful of base tables per session; cleared with the session GC
-  // (weak keys would be overkill for a bench-lifetime process).
-  private val scanParts =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), Integer]()
+  // query rep across the ~200 queries that read these tables. A handful
+  // of base tables per session, purged with the session's fixtures.
+  private val scanParts = SessionFixtures.register(
+    TrieMap[(String, LogicalPlan), Int]())
   private def scanPartitions(df: DataFrame): Int =
-    scanParts.computeIfAbsent(
-      (df.sparkSession, df.queryExecution.logical.canonicalized),
-      _ => df.rdd.getNumPartitions).intValue()
+    scanParts.getOrElseUpdate(
+      (SessionFixtures.key(df.sparkSession), df.queryExecution.logical.canonicalized),
+      df.rdd.getNumPartitions)
 
   // NOTE: Column./ is DOUBLE division; epoch-nanos (~1.7e18) exceed
   // double's 2^53 mantissa, so `ts / 1000000` is off by ±1 on edge values.

@@ -5,6 +5,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.xerial.snappy.Snappy
 import graft.tsdb.{ChunkFile, LabelMatcher, MatchType, Sample, SampleStream, TsQuerier}
 import graft.tsdb.datasource.TsdbIndexCache
+import graft.Persisted
 
 /** Prometheus remote-read protocol front-end — the reference's only query
   * entry point (`server.go:51,64-97`; SURVEY.md §2.1 S10, §3.1).
@@ -505,7 +506,17 @@ final class RemoteReadServer(querier: => TsQuerier, port: Int = 0, threads: Int 
       family("graft_index_cache_evictions_total", "counter", "Parsed block index cache evictions in this JVM.",
         Seq("" -> TsdbIndexCache.evictions)) ++
       family("graft_index_cache_entries", "gauge", "Parsed block indexes held by the cache.",
-        Seq("" -> TsdbIndexCache.entryCount.toLong))
+        Seq("" -> TsdbIndexCache.entryCount.toLong)) ++
+      family("graft_persist_hits_total", "counter", "Persisted-plan registry hits in this JVM.",
+        Seq("" -> Persisted.hits)) ++
+      family("graft_persist_misses_total", "counter", "Persisted-plan registry misses in this JVM.",
+        Seq("" -> Persisted.misses)) ++
+      family("graft_persist_evictions_total", "counter", "Persisted-plan registry evictions in this JVM.",
+        Seq("" -> Persisted.evictions)) ++
+      family("graft_persist_entries", "gauge", "Persisted plans held by the registry.",
+        Seq("" -> Persisted.entryCount.toLong)) ++
+      family("graft_persist_bytes", "gauge", "Materialized bytes held by the persisted-plan registry.",
+        Seq("" -> Persisted.bytes))
     val body = (lines.mkString("\n") + "\n").getBytes("UTF-8")
     ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4")
     ex.sendResponseHeaders(200, body.length)
@@ -609,34 +620,18 @@ final class RemoteReadServer(querier: => TsQuerier, port: Int = 0, threads: Int 
   // matches the upstream wire shape: {"status":"success","data":
   // {"resultType":"matrix","result":[{"metric":{...},"values":
   // [[seconds, "v"], ...]}]}}.
-  server.createContext("/api/v1/query_range", (ex: HttpExchange) => {
-    hit("/api/v1/query_range")
-    try {
-      val params = QueryApi.params(ex)
-      def need(k: String) = params.getOrElse(k,
-        throw new IllegalArgumentException(s"missing parameter '$k'"))
-      val startMs = QueryApi.toMs(need("start"))
-      val endMs = QueryApi.toMs(need("end"))
-      val stepMs = QueryApi.durMs(need("step"))
-      val df = graft.promql.PromQL.rangeQuery(
-        querier, need("query"), startMs, endMs, stepMs,
-        extrapolate = params.get("extrapolate").contains("true"))
-      val body = QueryApi.matrixJson(df,
-        withStats = params.get("stats").exists(_.nonEmpty)).getBytes("UTF-8")
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(200, body.length)
-      ex.getResponseBody.write(body)
-      ex.close()
-    } catch {
-      case e: Exception =>
-        val msg = ("""{"status":"error","errorType":"bad_data","error":""" +
-          QueryApi.jsonStr(String.valueOf(e.getMessage)) + "}").getBytes("UTF-8")
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(400, msg.length)
-        ex.getResponseBody.write(msg)
-        ex.close()
-    }
-  })
+  jsonContext("/api/v1/query_range") { ex =>
+    val params = QueryApi.params(ex)
+    def need(k: String) = params.getOrElse(k,
+      throw new IllegalArgumentException(s"missing parameter '$k'"))
+    val startMs = QueryApi.toMs(need("start"))
+    val endMs = QueryApi.toMs(need("end"))
+    val stepMs = QueryApi.durMs(need("step"))
+    val df = graft.promql.PromQL.rangeQuery(
+      querier, need("query"), startMs, endMs, stepMs,
+      extrapolate = params.get("extrapolate").contains("true"))
+    QueryApi.matrixJson(df, withStats = params.get("stats").exists(_.nonEmpty))
+  }
 
   /** Standard query-API error envelope around a JSON-producing
     * handler. */
@@ -783,7 +778,8 @@ final class RemoteReadServer(querier: => TsQuerier, port: Int = 0, threads: Int 
     s"""{"status":"success","data":{""" +
       s""""query.lookback-delta":"5m",""" +
       s""""spark.sql.shuffle.partitions":${QueryApi.jsonStr(conf("spark.sql.shuffle.partitions", ""))},""" +
-      s""""spark.graft.tsdb.peerCacheMaxBytes":${QueryApi.jsonStr(conf("spark.graft.tsdb.peerCacheMaxBytes", (8L << 30).toString))}}}"""
+      s""""${Persisted.MaxBytesKey}":""" +
+      QueryApi.jsonStr(conf(Persisted.MaxBytesKey, Persisted.DefaultMaxBytes.toString)) + "}}"
   }
 
   // /api/v1/status/config — the loaded configuration, verbatim (the

@@ -127,7 +127,7 @@ class TsdbBlockTable(val rootPath: String, tableSchema: StructType)
     * EQUALITY (below): two loads of the same root compare equal only
     * while the store holds the same immutable blocks, so canonicalized
     * plans match across separate `spark.read.format("graft-tsdb")`
-    * calls (what [[graft.tsdb.ChunkPeerCache]] and Spark's own
+    * calls (what [[graft.Persisted]] and Spark's own
     * CacheManager/exchange-reuse key on), yet a store that gained a
     * block yields an UNEQUAL table — cached relations over the old
     * block set can never serve the grown store. */

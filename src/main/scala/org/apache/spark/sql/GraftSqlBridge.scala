@@ -37,19 +37,19 @@ object GraftSqlBridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
-  /** ACTUAL accumulated bytes of a persisted DataFrame's materialized
-    * in-memory relation — the `CachedRDDBuilder.sizeInBytesStats`
-    * accumulator the executors fill as cached batches are built. 0 while
-    * the cache entry exists but no partition has materialized yet, and 0
-    * for a frame that is not cached at all. This is storage truth (what
-    * the BlockManagers actually hold), not a plan-stats estimate — the
-    * right currency for a byte-budgeted cache tier. */
-  def persistedBytes(df: DataFrame): Long =
-    df.asInstanceOf[classic.Dataset[_]].sparkSession.sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[classic.Dataset[_]]) match {
+  /** A reader of the bytes a persisted DataFrame's cache has
+    * materialized so far: its `CachedRDDBuilder.sizeInBytesStats`
+    * accumulator, which the executors fill as cached batches are built
+    * (0 until a job runs over it). The CacheManager lookup happens once,
+    * here; each read is then one accumulator read. Reads 0 for a frame
+    * that is not cached. */
+  def persistedSize(df: DataFrame): () => Long = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds) match {
       case scala.Some(cd) =>
-        val b = cd.cachedRepresentation.cacheBuilder
-        if (b.isCachedColumnBuffersLoaded) b.sizeInBytesStats.value else 0L
-      case _ => 0L
+        val acc = cd.cachedRepresentation.cacheBuilder.sizeInBytesStats
+        () => acc.sum
+      case _ => () => 0L
     }
+  }
 }

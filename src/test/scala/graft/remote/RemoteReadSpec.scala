@@ -605,10 +605,14 @@ class RemoteReadServerSpec extends AnyFunSuite {
       // two /federate hits above (one OK, one 400) both count
       assert(parsed("/federate") == 2.0 && parsed("/metrics") == 1.0,
         s"counters: $parsed")
-      // the parsed-index cache's lifetime counters and entries gauge
+      // the parsed-index cache's and the persisted-plan registry's
+      // lifetime counters and size gauges
       val byName = rows.collect { case (ls, v) if ls.size == 1 => ls("__name__") -> v }.toMap
       for (f <- Seq("graft_index_cache_hits_total", "graft_index_cache_misses_total",
-                    "graft_index_cache_evictions_total", "graft_index_cache_entries"))
+                    "graft_index_cache_evictions_total", "graft_index_cache_entries",
+                    "graft_persist_hits_total", "graft_persist_misses_total",
+                    "graft_persist_evictions_total", "graft_persist_entries",
+                    "graft_persist_bytes"))
         assert(byName.get(f).exists(_ >= 0.0), s"$f in $byName")
       assert(byName("graft_index_cache_entries") <= 8.0)
     } finally server.stop()
@@ -784,6 +788,7 @@ class RemoteReadServerSpec extends AnyFunSuite {
       val fl = get("/api/v1/status/flags").body()
       assert(fl.contains("\"query.lookback-delta\":\"5m\""))
       assert(fl.contains("spark.sql.shuffle.partitions"))
+      assert(fl.contains("\"spark.graft.persistMaxBytes\":"))
 
       // jsonStr escapes control chars as unicode escapes (valid JSON);
       // concatenated to keep the Scala lexer from decoding the escape
