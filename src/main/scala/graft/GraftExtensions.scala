@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -13,6 +13,10 @@ import graft.functions.CosineSimilarityExpr
   * standard third-party extension mechanism (no session rebuild, no
   * temp-function scoping).
   *
+  * Loading the extension also defaults Spark's generated-code cache cap
+  * to [[GraftExtensions.CodegenCacheEntries]] (see there); a value the
+  * user set wins.
+  *
   *  - `graft_cosine(a, b)` — codegen'd cosine similarity over numeric
   *    arrays ([[graft.functions.VectorExpressions.CosineSimilarityExpr]])
   *  - `graft_decode_chunk(bytes)` / `graft_encode_chunk(samples)` —
@@ -20,6 +24,8 @@ import graft.functions.CosineSimilarityExpr
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftSqlBridge.defaultContextConf(
+      GraftExtensions.CodegenCacheKey, GraftExtensions.CodegenCacheEntries.toString)
     // P7 regex matchers → label-value enumeration → postings (`In`)
     // pushdown for the graft-tsdb DSv2 source; runs in the operator
     // optimization batch, before V2 scan pushdown.
@@ -29,7 +35,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[CosineSimilarityExpr].getName, "graft_cosine"),
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_cosine(a, b) takes two array arguments")
-        import org.apache.spark.sql.GraftSqlBridge
         GraftSqlBridge.toCatalyst(
           graft.functions.VectorExpressions.cosine_native(
             GraftSqlBridge.column(args(0)), GraftSqlBridge.column(args(1))))
@@ -39,7 +44,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[graft.functions.SimhashExpr].getName, "graft_simhash"),
       (args: Seq[Expression]) => {
         require(args.length == 1, "graft_simhash(text) takes one argument")
-        import org.apache.spark.sql.GraftSqlBridge
         GraftSqlBridge.toCatalyst(
           graft.functions.MinhashExpressions.simhash_native(
             GraftSqlBridge.column(args.head)))
@@ -50,7 +54,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => {
         require(args.length == 3 || args.length == 4,
           "graft_minhash(text, shingleSize, numHashes[, numBands]) -> struct(hs, sig, bands)")
-        import org.apache.spark.sql.GraftSqlBridge
         import org.apache.spark.sql.catalyst.expressions.Literal
         def intArg(i: Int): Int = args(i) match {
           case Literal(v: Int, _) => v
@@ -66,7 +69,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo("graft.functions", "graft_decode_chunk"),
       (args: Seq[Expression]) => {
         require(args.length == 1, "graft_decode_chunk(bytes) takes one argument")
-        import org.apache.spark.sql.GraftSqlBridge
         GraftSqlBridge.toCatalyst(
           graft.functions.tsdb_decode_chunk(GraftSqlBridge.column(args.head)))
       }))
@@ -75,7 +77,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo("graft.functions", "graft_encode_chunk"),
       (args: Seq[Expression]) => {
         require(args.length == 1, "graft_encode_chunk(samples) takes one argument")
-        import org.apache.spark.sql.GraftSqlBridge
         GraftSqlBridge.toCatalyst(
           graft.functions.tsdb_encode_chunk(GraftSqlBridge.column(args.head)))
       }))
@@ -118,7 +119,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.functions", name),
         (args: Seq[Expression]) => {
           require(args.length == 1, s"$name(x) takes one argument")
-          import org.apache.spark.sql.GraftSqlBridge
           GraftSqlBridge.toCatalyst(fn(GraftSqlBridge.column(args.head)))
         }))
     }
@@ -157,4 +157,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.functions.SampleAggregates.HllSketchAgg(args.head, m)
       }))
   }
+}
+
+object GraftExtensions {
+
+  /** Static conf capping Spark's cache of compiled generated classes.
+    * `CodeGenerator` reads it once per JVM, at its first compile. */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Spark's default is 100, fewer than the distinct generated classes
+    * of one run of the perfbench `pipeline_batch` queries, which repeat
+    * in a cycle: every class then misses and Janino compiles it again on
+    * every run. One run compiles 166 distinct classes on the sf0.001 test
+    * data; in traced perfbench runs the timed passes still compiled for
+    * 260 ms at a cap of 150, and for ~30 ms at every cap from 200 to 1000. 1000 leaves room for a session that mixes
+    * several query families; each cached class keeps its loader in
+    * metaspace, so the cap also bounds that. */
+  val CodegenCacheEntries = 1000
 }

@@ -38,10 +38,12 @@ object ServeMain {
     * (`<name>/meta.json` present), from one listing of `dir`. Names in
     * `known` are blocks already seen: a block's `meta.json` is written
     * last and never removed while the block dir exists, so only the
-    * other names are checked for one. */
+    * other names are checked for one. `_`-prefixed names (the shipper's
+    * `_shipped` markers) are never blocks, since a ULID never starts
+    * with `_`, and are not checked. */
   def blockUlids(dir: String, conf: Configuration = null,
                  known: Set[String] = Set.empty): Seq[String] =
-    BlockIO.listNames(dir, conf)
+    BlockIO.listNames(dir, conf).filterNot(_.startsWith("_"))
       .filter(n => known(n) || BlockIO.exists(BlockIO.child(BlockIO.child(dir, n), "meta.json"), conf))
 
   /** The store view over a native block dir, rebuilt when the ULID set

@@ -227,14 +227,23 @@ object MediaScenes {
     import spark.implicits._
     df.select(col(idCol).cast("long"), col(sourceCol).cast("string"))
       .as[(Long, String)]
-      .map { case (id, src) =>
-        val (w, h, g) = sceneGray(id, transform)
-        val bytes = containerBytes(container, w, h, g)
-        (id, "image", bytes, src, mime(container), bytes.length.toLong) }
+      .map(sceneRows.getOrElseUpdate((container, transform), {
+        case (id, src) =>
+          val (w, h, g) = sceneGray(id, transform)
+          val bytes = containerBytes(container, w, h, g)
+          (id, "image", bytes, src, mime(container), bytes.length.toLong)
+      }))
       .toDF("media_id", "kind", "payload", "source", "mime", "n_bytes")
       .select(col("media_id"), col("kind"), col("payload"),
         struct(col("source"), col("mime"), col("n_bytes")).as("meta"))
   }
+
+  /** One row builder per (container, transform), built once:
+    * `MapElements` compares its function by identity, so a fresh
+    * closure per call would give every call a plan [[graft.Persisted]]
+    * has never seen. */
+  private val sceneRows = scala.collection.concurrent.TrieMap.empty[(String, String),
+    ((Long, String)) => (Long, String, Array[Byte], String, String, Long)]
 
   /** The MIXED-format corpus: every scene in all five containers,
     * `media_id = 10·id + containerIndex` — the same planted scene is a

@@ -491,13 +491,21 @@ object Multimodal {
     import spark.implicits._
     df.select(col(idCol).cast("long"), col(sourceCol).cast("string"))
       .as[(Long, String)]
-      .map { case (id, src) =>
-        val bytes = buildY4mScene(id, trim)
-        (id, "video", bytes, src, "video/x-yuv4mpeg", bytes.length.toLong) }
+      .map(y4mSceneRows.getOrElseUpdate(trim, {
+        case (id, src) =>
+          val bytes = buildY4mScene(id, trim)
+          (id, "video", bytes, src, "video/x-yuv4mpeg", bytes.length.toLong)
+      }))
       .toDF("media_id", "kind", "payload", "source", "mime", "n_bytes")
       .select(col("media_id"), col("kind"), col("payload"),
         struct(col("source"), col("mime"), col("n_bytes")).as("meta"))
   }
+
+  /** One row builder per `trim`, built once: `MapElements` compares
+    * its function by identity, so a fresh closure per call would give
+    * every call a plan [[Persisted]] has never seen. */
+  private val y4mSceneRows = scala.collection.concurrent.TrieMap.empty[Int,
+    ((Long, String)) => (Long, String, Array[Byte], String, String, Long)]
 
   /** 56-bit PCM energy-envelope fingerprint; null for undecodable or
     * sub-57-sample payloads. */

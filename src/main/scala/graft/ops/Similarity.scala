@@ -108,19 +108,26 @@ object Similarity {
     * lambda higher-order functions are CodegenFallback (interpreted, ~10×
     * slower per element), and fully unrolling the dots blows Janino's
     * method limits — a tight JVM loop over a captured Array[Array[Double]]
-    * is the fastest shape that stays deterministic. */
-  def srpSignature(vec: Column, dim: Int, planes: Int, offset: Int = 0): Column = {
-    val matrix: Array[Array[Double]] = srpPlanes(dim, planes, offset)
-    val sigUdf = udf { v: Seq[Double] =>
-      val arr = v.toArray
-      matrix.map { plane =>
-        var s = 0.0; var d = 0
-        while (d < arr.length && d < plane.length) { s += arr(d) * plane(d); d += 1 }
-        if (s >= 0) 1 else 0
+    * is the fastest shape that stays deterministic.
+    *
+    * One UDF per (dim, planes, offset), built once: `ScalaUDF` compares
+    * its function by identity, so a fresh `udf` per call would give
+    * every invocation a plan [[Persisted]] has never seen. */
+  def srpSignature(vec: Column, dim: Int, planes: Int, offset: Int = 0): Column =
+    srpUdfs.getOrElseUpdate((dim, planes, offset), {
+      val matrix: Array[Array[Double]] = srpPlanes(dim, planes, offset)
+      udf { v: Seq[Double] =>
+        val arr = v.toArray
+        matrix.map { plane =>
+          var s = 0.0; var d = 0
+          while (d < arr.length && d < plane.length) { s += arr(d) * plane(d); d += 1 }
+          if (s >= 0) 1 else 0
+        }
       }
-    }
-    sigUdf(vec)
-  }
+    })(vec)
+
+  private val srpUdfs = scala.collection.concurrent.TrieMap
+    .empty[(Int, Int, Int), org.apache.spark.sql.expressions.UserDefinedFunction]
 
   /** Per-table SRP bucket keys of a `tables`·`planesPerTable`-bit
     * [[srpSignature]]: `"t:b0,b1,…"` for table t's slice of sign bits —

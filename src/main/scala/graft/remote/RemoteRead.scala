@@ -516,7 +516,10 @@ final class RemoteReadServer(querier: => TsQuerier, port: Int = 0, threads: Int 
       family("graft_persist_entries", "gauge", "Persisted plans held by the registry.",
         Seq("" -> Persisted.entryCount.toLong)) ++
       family("graft_persist_bytes", "gauge", "Materialized bytes held by the persisted-plan registry.",
-        Seq("" -> Persisted.bytes))
+        Seq("" -> Persisted.bytes)) ++
+      family("graft_codegen_compilations_total", "counter",
+        "Generated classes Spark compiled in this JVM (codegen cache misses).",
+        Seq("" -> org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount))
     val body = (lines.mkString("\n") + "\n").getBytes("UTF-8")
     ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4")
     ex.sendResponseHeaders(200, body.length)

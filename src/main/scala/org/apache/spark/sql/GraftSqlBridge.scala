@@ -37,6 +37,13 @@ object GraftSqlBridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** Set `key` on the running SparkContext's conf unless it is already
+    * set there (`SparkContext.getActive` and `conf` are
+    * `private[spark]`). An extension calls this before the new session
+    * copies that conf, which is where static SQL confs are read from. */
+  def defaultContextConf(key: String, value: String): Unit =
+    org.apache.spark.SparkContext.getActive.foreach(_.conf.setIfMissing(key, value))
+
   /** A reader of the bytes a persisted DataFrame's cache has
     * materialized so far: its `CachedRDDBuilder.sizeInBytesStats`
     * accumulator, which the executors fill as cached batches are built

@@ -612,7 +612,7 @@ class RemoteReadServerSpec extends AnyFunSuite {
                     "graft_index_cache_evictions_total", "graft_index_cache_entries",
                     "graft_persist_hits_total", "graft_persist_misses_total",
                     "graft_persist_evictions_total", "graft_persist_entries",
-                    "graft_persist_bytes"))
+                    "graft_persist_bytes", "graft_codegen_compilations_total"))
         assert(byName.get(f).exists(_ >= 0.0), s"$f in $byName")
       assert(byName("graft_index_cache_entries") <= 8.0)
     } finally server.stop()

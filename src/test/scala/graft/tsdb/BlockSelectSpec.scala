@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import org.xerial.snappy.Snappy
@@ -238,7 +240,6 @@ class BlockSelectSpec extends AnyFunSuite {
       while (!jobs.contains("block-select-marker") && System.currentTimeMillis() < deadline)
         Thread.sleep(20)
       assert(jobs.contains("block-select-marker"))
-      import scala.jdk.CollectionConverters._
       assert(jobs.asScala.toSeq.takeWhile(_ != "block-select-marker").isEmpty, jobs)
     } finally {
       spark.sparkContext.removeSparkListener(listener)
@@ -283,6 +284,19 @@ class BlockSelectSpec extends AnyFunSuite {
     Files.createDirectory(dir.resolve("b3"))
     assert(ServeMain.blockUlids(dir.toString, known = Set("b3")) == Seq("b1", "b2", "b3"))
     Files.delete(dir.resolve("b3"))
+    // the shipper's `_shipped` marker dir is listed but never stat-ed:
+    // a ULID never starts with `_`
+    Files.createDirectories(dir.resolve("_shipped").resolve("7200000"))
+    val counted = new org.apache.hadoop.conf.Configuration()
+    counted.set("fs.statcount.impl", classOf[StatCountingFs].getName)
+    counted.setBoolean("fs.statcount.impl.disable.cache", true)
+    val cdir = s"statcount://$dir"
+    assert(BlockIO.listNames(cdir, counted).contains("_shipped"))
+    StatCountingFs.stated.clear()
+    assert(ServeMain.blockUlids(cdir, counted) == Seq("b1", "b2"))
+    val stated = StatCountingFs.stated.asScala.toSeq
+    assert(stated.exists(_.endsWith("/b1/meta.json")), stated)
+    assert(!stated.exists(_.contains("_shipped")), stated)
     // remove b1: the next querier, and its Spark view, no longer see it
     Files.walk(dir.resolve("b1")).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
     val after = view.querier()
@@ -291,4 +305,18 @@ class BlockSelectSpec extends AnyFunSuite {
       bits(after.selectStreams(T0, T0 + 2 * W, ms).collect()))
     assert(after.streamSelect(T0, T0 + 2 * W, ms).flatMap(_.samples).forall(_.t >= T0 + W))
   }
+}
+
+/** The local filesystem under the scheme `statcount:`, recording the
+  * path of every `exists` probe (what `BlockIO.exists` calls). */
+class StatCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: URI = URI.create("statcount:///")
+  override def exists(p: org.apache.hadoop.fs.Path): Boolean = {
+    StatCountingFs.stated.add(p.toUri.getPath)
+    super.exists(p)
+  }
+}
+
+object StatCountingFs {
+  val stated = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
